@@ -156,9 +156,12 @@ object Ann {
     // candidates (which v05's self-verifying oracle enforces with its
     // coverage sentinel). Costs one extra narrow pass over the base at
     // query time; [[buildIvfIndex]] gets the same liveness for free as
-    // write-time stats.
+    // write-time stats. Scoreable also means the codebook's dimension:
+    // a wrong-length vector gets a cell from its overlapping prefix but
+    // scores NULL, so it must not make its cell live (the persisted
+    // index never stores it — see ivfCodec).
     val liveCells = assigned
-      .filter(Vectors.norm2(col("b_emb")) > 0)
+      .filter(Vectors.norm2(col("b_emb")) > 0 && size(col("b_emb")) === codebook(0).length)
       .select("cell").distinct()
     val centDf = centroidFrame(base.sparkSession, codebook)
       .join(broadcast(liveCells), "cell")
@@ -265,7 +268,7 @@ object Ann {
     * incremental add, so both precisions derive from the same codebook
     * here and nowhere else.
     */
-  private def codebookFrame(
+  private[operators] def codebookFrame(
       spark: org.apache.spark.sql.SparkSession,
       codebook: Array[Array[Double]]): DataFrame = {
     import spark.implicits._
@@ -333,12 +336,31 @@ object Ann {
       .select(col("q_id"), explode(col("top.id")).as("cell_l"))
       .select(col("q_id"), col("cell_l").cast("int").as("cell"))
 
+  /** The plain-IVF codec: cell assignment by the coarse codebook, the
+    * vector payload (b_id, b_emb, b_nrm; cell). Rows of another
+    * dimension are dropped like null join keys: NearestCentroid would
+    * assign them a cell from the overlapping prefix, but `vec_dot`
+    * scores them NULL, so a cell holding only such rows would be
+    * "live" and answer nothing. Zero-norm rows are kept (the id stays
+    * listed) but are not scoreable ([[IndexLake.Ivf]]).
+    */
+  private def ivfCodec(codebook: Array[Array[Double]]): IndexLake.Codec =
+    new IndexLake.Codec(IndexLake.Ivf, codebook) {
+      private val dim = codebook(0).length
+      def encode(b: DataFrame): DataFrame =
+        b.filter(size(col("b_emb")) === dim)
+          .withColumn("cell", cellExpr(col("b_emb"), codebook))
+          .filter(col("cell").isNotNull) // null vec/element: see knnIvf
+          .withColumn("b_nrm", Vectors.norm2(col("b_emb")))
+      def gates: String = s"null vector or element, or dimension != index dim $dim"
+    }
+
   /** Build and persist an IVF index at `path`: the cell-assigned base
     * as parquet PARTITIONED BY cell -- a query probing nprobe of nlist
     * cells then reads ONLY those directories -- plus a codebook sidecar
-    * carrying write-time occupancy stats, so the query path gets
-    * live-cell filtering for free (no extra base pass; contrast the
-    * on-the-fly [[knnIvf]]).
+    * carrying write-time occupancy, so the query path gets live-cell
+    * filtering for free (contrast the on-the-fly [[knnIvf]]). Lifecycle
+    * contract: [[IndexLake]].
     *
     * Layout: `path/base` (b_id, b_emb, b_nrm; cell = partition key),
     * `path/codebook` (cell, centroid float array, centroid_d double
@@ -359,432 +381,56 @@ object Ann {
       fitOn: Option[DataFrame] = None): Unit = {
     val b = base.select(baseId.as("b_id"), baseVec.as("b_emb"))
     val fitB = fitOn.map(_.select(baseId.as("b_id"), baseVec.as("b_emb"))).getOrElse(b)
-    val codebook = fitCodebook(fitB, nlist, seed, maxFit)
-    invalidateIndexMarker(base.sparkSession, path) // in-place rebuild: see scaladoc
-    b.withColumn("cell", cellExpr(col("b_emb"), codebook))
-      .filter(col("cell").isNotNull) // see knnIvf
-      .withColumn("b_nrm", Vectors.norm2(col("b_emb")))
-      // cluster by the partition key before the write — see
-      // [[clusterForWrite]] for why REBALANCE, not repartition(key)
-      .transform(clusterForWrite("cell"))
-      .write.partitionBy("cell").mode("overwrite").parquet(s"$path/base")
-    // occupancy of SCOREABLE members from the WRITTEN files — at build
-    // time this re-read costs what the write just cost, and the stats
-    // provably describe the data on disk
-    val spark = base.sparkSession
-    val members = spark.read.parquet(s"$path/base")
-      .filter(col("b_nrm") > 0)
-      .groupBy("cell").agg(count(lit(1)).as("__m"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap // <= nlist rows
-    writeCodebookSidecar(spark, path, codebook, members, atomicSwap = false)
+    val codec = ivfCodec(fitCodebook(fitB, nlist, seed, maxFit))
+    IndexLake.build(path, codec, b, codec.encode(b))
   }
 
   /** Incrementally extend a persisted [[buildIvfIndex]] index: assign
-    * `rows` with the index's PERSISTED double codebook (no re-fit --
-    * the codebook is immutable for the index's lifetime, so build+add
-    * and build-all-with-the-same-codebook produce identical cells),
-    * append them to the cell partition directories, and refresh the
-    * occupancy sidecar via a two-rename swap (the [[graft.etl.Compact]]
-    * pattern: the old sidecar is parked, never deleted before the new
-    * one is in place). This is the 1%/day growth path for a 10^9-vector
+    * `rows` with the index's PERSISTED double codebook (immutable for
+    * the index's lifetime, so build+add and build-all-with-the-same-
+    * codebook produce identical cells) and append them to the cell
+    * directories. This is the 1%/day growth path for a 10^9-vector
     * corpus, where a daily re-fit + full rewrite is not an option.
-    *
-    * Not transactional: a reader racing the sidecar swap can see a
-    * missing codebook directory for an instant -- coordinate externally
-    * (same caveat as Compact).
+    * Lifecycle contract: [[IndexLake]].
     */
   def addToIvfIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      rows: DataFrame, id: Column, vec: Column): Unit = {
-    // an IVF-PQ index shares this codebook layout but its base holds
-    // CODES, not vectors — appending vector rows would corrupt it
-    // silently (mixed parquet schemas + occupancy counting rows the
-    // compressed scan can't read), so refuse by the pq-sidecar marker
-    requirePqMarker(spark, path, expectPq = false,
-      otherVerb = "Pq.addToIvfPqIndex", sqOtherVerb = "Sq.addToIvfSq8Index")
-    val (codebook, prevMembers) = readCodebookSidecar(spark, path)
-    val basePath = s"$path/base"
-    // belt-and-braces with the marker check above: the schema read is
-    // footer-weight, and appending vector rows into a codes-only base
-    // would be silent mixed-schema corruption (the worst failure mode)
-    require(spark.read.parquet(basePath).schema.fieldNames.contains("b_emb"),
-      s"$basePath does not hold vector rows (no b_emb column) -- not a plain IVF index")
-    // snapshot the file listing around the append so the occupancy
-    // delta is counted from exactly the FILES THIS ADD WROTE -- not
-    // from re-evaluating the (lazy, uncached) assignment plan, which a
-    // non-deterministic input would make disagree with what landed on
-    // disk (an undercounted cell whose only members are appended rows
-    // would read members=0 and be unreachable forever). Listing is
-    // metadata-weight; the data read is increment-sized. Re-counting
-    // the WHOLE base instead would cost a full-corpus scan per 1%
-    // increment -- what the growth path exists to avoid.
-    val fs = new org.apache.hadoop.fs.Path(basePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val before = listDataFiles(fs, basePath)
-    rows.select(id.as("b_id"), vec.as("b_emb"))
-      .withColumn("cell", cellExpr(col("b_emb"), codebook))
-      .filter(col("cell").isNotNull) // see knnIvf
-      .withColumn("b_nrm", Vectors.norm2(col("b_emb")))
-      .transform(clusterForWrite("cell")) // clustered append (see build)
-      .write.partitionBy("cell").mode("append").parquet(basePath)
-    val newFiles = (listDataFiles(fs, basePath) -- before).toSeq
-    val delta =
-      if (newFiles.isEmpty) Map.empty[Int, Long]
-      else spark.read.option("basePath", basePath).parquet(newFiles: _*)
-        .filter(col("b_nrm") > 0)
-        .groupBy("cell").agg(count(lit(1)).as("__m"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val members = codebook.indices
-      .map(c => c -> (prevMembers.getOrElse(c, 0L) + delta.getOrElse(c, 0L))).toMap
-    writeCodebookSidecar(spark, path, codebook, members, atomicSwap = true)
-  }
+      rows: DataFrame, id: Column, vec: Column): Unit =
+    IndexLake.add(spark, path, IndexLake.Ivf,
+      rows.select(id.as("b_id"), vec.as("b_emb")))(ivfCodec)
 
   /** Delete ids from a persisted [[buildIvfIndex]] index — the
-    * RETENTION verb, closing the index lifecycle (build → add → remove):
-    * without it, a retention delete on the source corpus leaves the
-    * index serving ghost rows (plain IVF) or hard-failing every query
-    * at the drift guard (IVF-PQ) until a full rebuild. Reference anchor:
-    * the re-index semantics of
-    * /root/reference/src/file_indexing_system.py:200-244, here as a
-    * surgical partition rewrite instead of a rebuild.
-    *
-    * Only the cell partitions CONTAINING victims are rewritten (an
-    * anti-join per affected cell, all cells in one distributed job);
-    * untouched cells keep their files byte-for-byte. Each rewritten
-    * leaf swaps in via the [[graft.etl.Compact]] park-then-swap with a
-    * per-cell row-count gate proven BEFORE any swap (kept = source −
-    * victims, for every affected cell), so a lossy rewrite aborts with
-    * the index untouched. The occupancy sidecar is refreshed for the
-    * rewritten cells from the files that were written; the codebook
-    * stays immutable (cells never move — remove(build+add) ≡
-    * build-without-the-victims, spec-pinned).
-    *
-    * Locating victims costs ONE (b_id, cell)-pruned scan of the base —
-    * victims carry no cell, so one narrow lookup pass is unavoidable;
-    * the rewrite reads only the affected cell directories. Removing
-    * every last row leaves an empty index (all-zero occupancy); like a
-    * crashed swap, queries against it fail loudly rather than answer
-    * from nothing. Not transactional (same caveat as [[addToIvfIndex]]).
+    * RETENTION verb closing the lifecycle (build → add → remove):
+    * without it a retention delete on the source corpus leaves the
+    * index serving ghost rows until a full rebuild. Only the cells
+    * holding victims are rewritten ([[IndexLake.remove]]). Removing
+    * every last row leaves an empty index (all-zero occupancy);
+    * queries against it fail loudly rather than answer from nothing.
     */
   def removeFromIvfIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      victims: DataFrame, vicId: Column): Unit = {
-    requirePqMarker(spark, path, expectPq = false,
-      otherVerb = "Pq.removeFromIvfPqIndex",
-      sqOtherVerb = "Sq.removeFromIvfSq8Index")
-    // occupancy counts SCOREABLE members (norm > 0), matching the build
-    removeFromIndexBase(spark, path, victims, vicId, scoreable = col("b_nrm") > 0)
-  }
+      victims: DataFrame, vicId: Column): Unit =
+    IndexLake.remove(spark, path, IndexLake.Ivf, victims, vicId)
 
-  /** The pq sidecar directory IS the index-type marker: present ⇒ IVF-PQ
-    * (codes-only base), absent ⇒ plain IVF (vector base). Every lifecycle
-    * verb checks it in the direction it needs before touching the base —
-    * this is the single owner of that rule; `otherVerb` names the verb
-    * the caller should have used on the other index type.
-    */
-  /** Directed-misuse guard across the three index layouts sharing the
-    * codebook/base shape: a plain-IVF verb must refuse a PQ or SQ8
-    * index (its base holds codes, not vectors) and vice versa.
-    * `expect` is the quantizer sidecar dir this verb's layout carries —
-    * "pq", "sq", or "" for plain IVF.
-    */
-  private[operators] def requireQuantizerMarker(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      expect: String, otherVerb: String, sqOtherVerb: String = ""): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def has(m: String) = fs.exists(new org.apache.hadoop.fs.Path(s"$path/$m"))
-    val present = Seq("pq", "sq").filter(has)
-    expect match {
-      case "" =>
-        // the remedy names the verb for the layout actually FOUND:
-        // a pq sidecar points at the Pq.* verb, an sq sidecar at the
-        // Sq.* verb — never a Pq remedy for an SQ index
-        val remedy = present.headOption match {
-          case Some("sq") if sqOtherVerb.nonEmpty => sqOtherVerb
-          case _ => otherVerb
-        }
-        require(present.isEmpty,
-          s"$path is an IVF-${present.headOption.getOrElse("?").toUpperCase} index " +
-            s"(has a ${present.headOption.getOrElse("?")} sidecar) -- use $remedy")
-      case m =>
-        require(has(m),
-          if (present.isEmpty)
-            s"$path has no $m sidecar -- it is a plain IVF index; use $otherVerb"
-          else
-            s"$path carries a ${present.head} sidecar, not $m -- use $otherVerb")
-        require(present == Seq(m),
-          s"$path carries conflicting quantizer sidecars ($present) -- corrupt index")
-    }
-  }
-
-  private[operators] def requirePqMarker(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      expectPq: Boolean, otherVerb: String, sqOtherVerb: String = ""): Unit =
-    requireQuantizerMarker(spark, path, if (expectPq) "pq" else "", otherVerb,
-      sqOtherVerb)
-
-  /** Shared removal core for every partitioned index layout — IVF and
-    * IVF-PQ (partition column `cell`, occupancy sidecar refreshed) and
-    * the flat OPQ lake (partition column `bucket`, no occupancy — a
-    * flat layout has no probe structure to keep honest). The layouts
-    * differ only in what the base rows hold, which rows count toward
-    * occupancy (`scoreable`), and the partition key; the safety-
-    * critical machinery — victim materialization, per-leaf row-count
-    * gate, park-then-swap — has exactly ONE owner here, so a fix
-    * reaches every family at once. See [[removeFromIvfIndex]] for the
-    * contract; [[Pq.removeFromIvfPqIndex]] passes `lit(true)` (every
-    * persisted codes row is scoreable by construction);
-    * [[Opq.removeFromOpqIndex]] passes `partCol = "bucket",
-    * withOccupancy = false`.
-    */
-  private[operators] def removeFromIndexBase(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      victims: DataFrame, vicId: Column, scoreable: Column,
-      partCol: String = "cell", withOccupancy: Boolean = true): Unit = {
-    val basePath = s"$path/base"
-    val bp = new org.apache.hadoop.fs.Path(basePath)
-    val fs = bp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmpRoot = new org.apache.hadoop.fs.Path(bp.getParent, bp.getName + "__remove_tmp")
-    val oldRoot = new org.apache.hadoop.fs.Path(bp.getParent, bp.getName + "__remove_old")
-    // a parked tree with FILES is a crashed removal swap — it may hold
-    // a cell's only copy, so block until recovered (single owner:
-    // Compact.clearOrRefuseParked); file-less residue dirs are
-    // cleared. A crashed COMPACTION's parked tree blocks equally: an
-    // anti-join rewrite against a cell-less lake cements the loss.
-    graft.etl.Compact.clearOrRefuseParked(fs, oldRoot, "removal")
-    graft.etl.Compact.requireServable(fs, bp, action = "removal")
-    // an already-emptied base (every leaf previously removed) holds no
-    // victims by definition — and a schema-less read of it would die
-    // in parquet inference with an error naming nothing
-    if (!fs.exists(bp) || listDataFiles(fs, basePath).isEmpty) return
-    fs.delete(tmpRoot, true)
-    // victims are MATERIALIZED once and read back for every use below:
-    // the affected-cell scan, the anti-join rewrite and the row-count
-    // gate would otherwise each re-evaluate the caller's victims plan,
-    // and a nondeterministic one (sample, limit, first-wins agg — the
-    // hazard class addToIvfIndex's listing snapshot defends against)
-    // could agree with itself at the gate while leaving "removed" rows
-    // on disk. One narrow id column, increment-sized.
-    val vicDir = new org.apache.hadoop.fs.Path(bp.getParent, bp.getName + "__remove_vic")
-    fs.delete(vicDir, true)
-    try {
-      victims.select(vicId.as("b_id")).distinct()
-        .write.mode("overwrite").parquet(vicDir.toString)
-      removeWithVictims(spark, path, basePath, bp, fs, tmpRoot, oldRoot,
-        spark.read.parquet(vicDir.toString), scoreable, partCol, withOccupancy)
-    } finally fs.delete(vicDir, true)
-  }
-
-  /** [[removeFromIndexBase]] after victim materialization: locate,
-    * rewrite, gate, swap, decrement.
-    */
-  private def removeWithVictims(
-      spark: org.apache.spark.sql.SparkSession, path: String, basePath: String,
-      bp: org.apache.hadoop.fs.Path, fs: org.apache.hadoop.fs.FileSystem,
-      tmpRoot: org.apache.hadoop.fs.Path, oldRoot: org.apache.hadoop.fs.Path,
-      vic: DataFrame, scoreable: Column, partCol: String,
-      withOccupancy: Boolean): Unit = {
-    val sidecar =
-      if (withOccupancy) Some(readCodebookSidecar(spark, path)) else None
-    val base = spark.read.parquet(basePath)
-    // ONE narrow pass over the base answers BOTH removal questions —
-    // which leaves hold a victim, and the per-leaf (rows, victims)
-    // counts the post-rewrite gate needs (the old shape paid a second
-    // scan+join over the affected leaves just for the counts). ≤ nlist
-    // (or nBuckets) driver rows either way.
-    val leafStats = base.select(col("b_id"), col(partCol))
-      .join(vic.withColumn("__v", lit(1)), Seq("b_id"), "left")
-      .groupBy(partCol)
-      .agg(count(lit(1)).as("n"), count(col("__v")).as("nv"))
-      .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val affected = leafStats.collect { case (c, (_, nv)) if nv > 0 => c }
-      .toArray.sorted
-    if (affected.isEmpty) return // no victim is indexed — nothing to do
-    val pruned = base.filter(col(partCol).isin(affected.map(Int.box): _*))
-    // one distributed rewrite job for ALL affected leaves; the write
-    // lands OUTSIDE the index (a work dir inside path/base would read
-    // as a partition directory — the Compact lesson). Clustered by the
-    // partition key first (the writeShards pattern) so each rewritten
-    // leaf lands as ONE file — a bare partitionBy would let every task
-    // fragment every leaf it holds rows for, undoing compactIndex on
-    // each retention delete.
-    pruned.join(vic, Seq("b_id"), "left_anti")
-      .transform(clusterForWrite(partCol))
-      .write.partitionBy(partCol).mode("overwrite").parquet(tmpRoot.toString)
-    // row-count gate per leaf BEFORE any swap: kept-on-disk must equal
-    // source − victims for every affected leaf. Source-side counts come
-    // from the single leafStats pass above.
-    val srcCnt = leafStats.filter { case (c, _) => affected.contains(c) }
-    val tmpFiles = listDataFiles(fs, tmpRoot.toString)
-    // (rows, scoreable rows) per rewritten leaf — the same read feeds
-    // the gate and the occupancy refresh. An all-victims rewrite
-    // produces no files at all: guard the schema-less read.
-    val tmpCnt: Map[Int, (Long, Long)] =
-      if (tmpFiles.isEmpty) Map.empty
-      else spark.read.parquet(tmpRoot.toString)
-        .groupBy(partCol)
-        .agg(count(lit(1)).as("n"), count(when(scoreable, lit(1))).as("ns"))
-        .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
-    affected.foreach { c =>
-      val (n, nv) = srcCnt(c)
-      val kept = tmpCnt.get(c).map(_._1).getOrElse(0L)
-      if (kept != n - nv) {
-        fs.delete(tmpRoot, true)
-        throw new IllegalStateException(
-          s"removal rewrite of $basePath $partCol=$c would lose rows " +
-            s"($n read, $nv victims, $kept rewritten) -- aborted, index untouched")
-      }
-    }
-    // the DECREMENTED sidecar is written BEFORE the swaps: occupancy
-    // must never overcount a swapped-out cell (members > 0 with no
-    // cell dir is a GHOST cell — probed, silently empty, and a re-run
-    // of the removal finds no victims so it can never heal). With the
-    // sidecar first, every crash window is retry-safe instead: an
-    // emptied cell goes members=0 while its victim rows are still on
-    // disk (liveCentroids skips it — unreachable victims ARE removed),
-    // and a partially-emptied cell stays live with its victims still
-    // present, so re-running the same removal finds them and completes
-    // the rewrite. Transiently-visible victims until the retry beat
-    // permanently-invisible survivors. (Occupancy-less layouts — the
-    // flat OPQ lake — skip this step: nothing probes their leaves.)
-    sidecar.foreach { case (codebook, prevMembers) =>
-      val members = codebook.indices.map { c =>
-        c -> (if (affected.contains(c)) tmpCnt.get(c).map(_._2).getOrElse(0L)
-              else prevMembers.getOrElse(c, 0L))
-      }.toMap
-      writeCodebookSidecar(spark, path, codebook, members, atomicSwap = true)
-    }
-    // per-leaf two-rename swaps (metadata ops); a fully-emptied leaf is
-    // parked then dropped — its occupancy row (if any) is already 0
-    graft.etl.Compact.swapRewrittenLeaves(
-      fs, bp, tmpRoot, oldRoot, affected.map(c => s"$partCol=$c").toSeq)
-  }
-
-  /** Cluster rows by the partition key before a `partitionBy` write —
-    * the discipline every index build/append/rewrite in the family
-    * shares. A bare partitionBy lets every task fragment every key it
-    * holds rows for (tasks × keys files, whose open/commit overhead
-    * dominates small builds and decays large ones); a plain
-    * `repartition(key)` fixes the file count but pins each key's
-    * ENTIRE payload to one task — a hot cell at 100 TB serializes
-    * into a single writer (round-15's open flaw), and a tiny build
-    * pays one task per key regardless of data size. REBALANCE gives
-    * both ends: rows cluster by key, AQE coalesces small partitions
-    * (tiny builds land in a handful of write tasks) and
-    * `optimizeSkewsInRebalancePartitions` (on by default) SPLITS an
-    * oversized key across writers by `advisoryPartitionSizeInBytes` —
-    * the hot cell writes in parallel as several files instead of one
-    * giant serialized one (guide §6's REBALANCE-before-write).
-    */
+  /** Kept for callers outside the index family: see [[IndexLake.clusterForWrite]]. */
   private[graft] def clusterForWrite(partCol: String)(df: DataFrame): DataFrame =
-    df.hint("rebalance", col(partCol))
+    IndexLake.clusterForWrite(partCol)(df)
 
-  /** All data-file paths under `dir`, recursive. Hidden-name rule
-    * shared with [[graft.etl.Compact.isHiddenName]], applied to EVERY
-    * path segment below `dir` — a crashed write's
-    * `_temporary/.../part-x.parquet` must not count as data (readers
-    * don't see it, so neither may the occupancy diff).
-    */
+  /** Kept for callers outside the index family: see [[IndexLake.listDataFiles]]. */
   private[graft] def listDataFiles(
-      fs: org.apache.hadoop.fs.FileSystem, dir: String): Set[String] = {
-    val base = fs.makeQualified(new org.apache.hadoop.fs.Path(dir))
-    def hiddenAnywhere(p: org.apache.hadoop.fs.Path): Boolean = {
-      var cur = p
-      while (cur != null && cur != base) {
-        if (graft.etl.Compact.isHiddenName(cur.getName)) return true
-        cur = cur.getParent
-      }
-      false
-    }
-    val out = scala.collection.mutable.Set.empty[String]
-    val it = fs.listFiles(base, true)
-    while (it.hasNext) {
-      val f = it.next()
-      if (!hiddenAnywhere(f.getPath)) out += f.getPath.toString
-    }
-    out.toSet
-  }
-
-  /** The persisted coarse codebook (double centroids, for assignment
-    * parity with the original build) plus the previous occupancy
-    * counts — the single owner of the sidecar read + dense-cells
-    * validation shared by [[addToIvfIndex]] and
-    * [[Pq.addToIvfPqIndex]]. Bounded collect: <= nlist rows.
-    */
-  private[operators] def readCodebookSidecar(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String): (Array[Array[Double]], Map[Int, Long]) = {
-    val cbRows = spark.read.parquet(s"$path/codebook")
-      .select("cell", "centroid_d", "members").collect()
-    require(cbRows.nonEmpty, s"$path/codebook is empty -- not an index")
-    val byCell = cbRows.sortBy(_.getInt(0))
-    require(
-      byCell.map(_.getInt(0)).sameElements(byCell.indices),
-      s"$path/codebook cells are not dense 0..${byCell.length - 1} -- corrupt index")
-    (byCell.map(_.getSeq[Double](1).toArray),
-      byCell.map(r => r.getInt(0) -> r.getLong(2)).toMap)
-  }
-
-  /** Invalidate the index-complete marker (`path/codebook`) BEFORE an
-    * in-place REBUILD touches the lakes: a crash after the base
-    * overwrite would otherwise pair the NEW base with the STALE
-    * codebook (probe ranking disagreeing with the new cell
-    * assignment — and for the quantizer tiers, stale stats/tables
-    * decoding new codes) and serve silently wrong results. With the
-    * marker gone every crash window refuses loudly at
-    * [[readCodebookSidecar]] instead (the [[graft.operators.Bm25]]
-    * build discipline applied to the ANN family).
-    */
-  private[operators] def invalidateIndexMarker(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/codebook")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true): Unit
-  }
-
-  /** Write the codebook sidecar (centroids in both precisions +
-    * occupancy, via [[codebookFrame]] — the single owner of the float
-    * cast). With `atomicSwap` the new sidecar lands in a sibling temp
-    * dir and replaces the old one with two renames.
-    */
-  private[operators] def writeCodebookSidecar(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      codebook: Array[Array[Double]], members: Map[Int, Long],
-      atomicSwap: Boolean): Unit = {
-    import spark.implicits._
-    val mdf = members.toSeq.toDF("__cell", "__m")
-    val cb = codebookFrame(spark, codebook)
-      .join(mdf, col("cell") === col("__cell"), "left")
-      .select(col("cell"), col("centroid"), col("centroid_d"),
-        coalesce(col("__m"), lit(0L)).as("members"))
-      .coalesce(1)
-    val target = s"$path/codebook"
-    if (!atomicSwap) {
-      cb.write.mode("overwrite").parquet(target)
-    } else {
-      val p = new org.apache.hadoop.fs.Path(target)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val tmp = new org.apache.hadoop.fs.Path(p.getParent, p.getName + "__tmp")
-      val old = new org.apache.hadoop.fs.Path(p.getParent, p.getName + "__old")
-      fs.delete(tmp, true)
-      fs.delete(old, true)
-      cb.write.mode("overwrite").parquet(tmp.toString)
-      graft.etl.Compact.swapInto(fs, tmp, p, old) // single owner of the 2-rename swap
-    }
-  }
+      fs: org.apache.hadoop.fs.FileSystem, dir: String): Set[String] =
+    IndexLake.listDataFiles(fs, dir)
 
   /** Compact a persisted index's base lake (`path/base`) — the second
-    * half of the growth lifecycle: every [[addToIvfIndex]] /
-    * [[Pq.addToIvfPqIndex]] increment appends one file per touched
-    * cell, so a daily-add index decays after a year into ~365 small
-    * files per cell — exactly the listing/footer pathology
-    * [[graft.etl.Compact]] exists to fix, here composed with the index
-    * layout. Delegates to [[graft.etl.Compact.compactPartitioned]]
-    * (work dirs OUTSIDE the lake, per-leaf row-count gate,
-    * park-then-swap), so the cell partition names survive untouched;
-    * the codebook/pq sidecars are never touched, and query results are
-    * bit-identical before/after (spec-pinned — compaction moves bytes,
-    * never rows). Works on both the IVF and IVF-PQ layouts (it only
+    * half of the growth lifecycle: every add appends one file per
+    * touched cell (or bucket), so a daily-add index decays after a year
+    * into ~365 small files per leaf — exactly the listing/footer
+    * pathology [[graft.etl.Compact]] exists to fix. Delegates to
+    * [[graft.etl.Compact.compactPartitioned]] (work dirs OUTSIDE the
+    * lake, per-leaf row-count gate, park-then-swap), so the partition
+    * names survive untouched; the sidecars are never touched, and query
+    * results are bit-identical before/after (spec-pinned — compaction
+    * moves bytes, never rows). Works on every family's layout (it only
     * sees the partitioned base).
     */
   def compactIndex(
@@ -816,7 +462,7 @@ object Ann {
     * and completes the rewrite; after the swap-in but before the
     * park's delete, the root is the count-gated complete index, so the
     * rerun finishes the delete instead of rewriting; serving refuses a
-    * filed park throughout ([[requireBaseServable]]), and a park
+    * filed park throughout ([[IndexLake.requireServing]]), and a park
     * WITHOUT an intent is refused as unrecognized, never deleted.
     * Post-swap, cached plans/listings over the path are invalidated
     * (`refreshByPath`) so no reader pairs old cell rows with the new
@@ -867,12 +513,11 @@ object Ann {
         else fs.delete(old, true)
       }
     }
-    requirePqMarker(spark, path, expectPq = false,
-      otherVerb = "Pq.buildIvfPqIndex on the source corpus (codes carry no raw vectors to re-fit from)",
-      sqOtherVerb = "Sq.buildIvfSq8Index on the source corpus (codes carry no raw vectors to re-fit from)")
     // parked BASE leaves (a crashed remove/compact) block equally — a
-    // refit reading a cell-less base would cement the loss
-    requireBaseServable(spark, path)
+    // refit reading a cell-less base would cement the loss; a PQ/SQ8
+    // index is refused with its build verb named (codes carry no raw
+    // vectors to re-fit from — rebuild it from the source corpus)
+    IndexLake.requireServing(spark, path, IndexLake.Ivf, "build")
     if (spark.read.parquet(s"$path/codebook").count() == newNlist.toLong) {
       // already at the target width: with a standing intent this is the
       // crash window between the swap's old-delete and the intent
@@ -929,30 +574,23 @@ object Ann {
     IndexOccupancy(agg.getLong(0), agg.getLong(1), agg.getLong(2))
   }
 
-  /** KNN against a persisted [[buildIvfIndex]] index. The probe ranks
-    * come from the codebook sidecar; the union of probed cells (a
-    * bounded <= nlist driver collect) turns the base scan into a
-    * partition-pruned read of only those cell directories. Same
-    * arithmetic as [[knnIvf]] end-to-end: the same build inputs and the
-    * same (k, nprobe) produce identical rows.
+  /** KNN against a persisted [[buildIvfIndex]] index over the shared
+    * probed-cell scan ([[IndexLake.probe]]: live-cell probe ranks from
+    * the codebook sidecar, partition-pruned read of only the probed
+    * cells). Same arithmetic as [[knnIvf]] end-to-end: the same build
+    * inputs and the same (k, nprobe) produce identical rows.
     *
-    * `eligible` — FILTERED search (the serving-side metadata predicate:
-    * "nearest neighbors WHERE license = permissive"): a frame + id
-    * column naming the base ids allowed to score. PRE-filtering, not
-    * post-filtering — ineligible candidates are semi-joined out of the
-    * probed-cell scan BEFORE scoring, so the top-k ranks over eligible
-    * candidates only (a post-filter of an unfiltered top-k would
-    * return < k rows and silently lose eligible neighbors ranked k+1+).
-    * The index stores vectors only; eligibility arrives as an id set
-    * precisely so any metadata predicate — computed on any table — can
-    * drive it. Spark picks broadcast vs shuffle for the semi-join from
-    * the eligible frame's size (AQE); a selective predicate also
-    * shrinks the scoring work ∝ selectivity. Queries whose probed
-    * cells hold no eligible candidate return no rows (same contract as
-    * an empty match set).
+    * `eligible` — FILTERED search ("nearest neighbors WHERE license =
+    * permissive"): a frame + id column naming the base ids allowed to
+    * score, PRE-filtered out of the scan before scoring, so the top-k
+    * ranks over eligible candidates only (a post-filter would return
+    * < k rows and silently lose eligible neighbors ranked k+1+). The
+    * index stores vectors only; eligibility arrives as an id set so
+    * any metadata predicate, computed on any table, can drive it.
+    * Queries whose probed cells hold no eligible candidate return no
+    * rows.
     *
-    * CALLER CONTRACT: caches the (q_id, cell) probe frame (it feeds
-    * both the pruning list and the scoring join) -- wrap in
+    * CALLER CONTRACT: caches the (q_id, cell) probe frame -- wrap in
     * [[Dedup.scoped]] or clear the cache, as with the dedup operators.
     */
   def queryIvfIndex(
@@ -961,24 +599,9 @@ object Ann {
       k: Int, nprobe: Int = 4,
       eligible: Option[(DataFrame, Column)] = None,
       withVec: Boolean = false): DataFrame = {
-    requireBaseServable(spark, path)
-    val centDf = readLiveCentroids(spark, path)
-    val q = validQueries(queries, qId, qVec)
-    // take(1): an index whose every cell is dead has an empty live
-    // codebook — no rows can come back, so there is no dim to enforce
-    centDf.select(size(col("centroid"))).take(1)
-      .foreach(r => requireQueryDim(q, r.getInt(0)))
-    val (cells, probed) = probePruned(q, centDf, nprobe)
-    val base = spark.read.parquet(s"$path/base")
-      .filter(col("cell").isin(cells.map(Int.box): _*))
-      .filter(col("b_nrm") > 0) // zero-norm: see knnBruteForce
-    val filtered = eligible match {
-      case Some((el, elId)) =>
-        base.join(el.select(elId.as("b_id")), Seq("b_id"), "left_semi")
-      case None => base
-    }
-    val scored = filtered
-      .join(broadcast(probed.withColumnRenamed("qp_nrm", "q_nrm")), "cell")
+    val p = IndexLake.probe(spark, path, IndexLake.Ivf, queries, qId, qVec, nprobe, eligible)
+    val scored = p.scan
+      .join(broadcast(p.probed.withColumnRenamed("qp_nrm", "q_nrm")), "cell")
       .select(col("q_id"), col("b_id"),
         (Vectors.dot(col("b_emb"), col("q_emb")) / (col("b_nrm") * col("q_nrm"))).as("sim"))
     val top = topkPerQuery(scored, k)
@@ -990,7 +613,7 @@ object Ann {
       // partition-pruned scan as the scoring pass) for ≤ queries × k
       // ids — never the whole lake; results are identical to the
       // plain form plus one column.
-      top.join(filtered.select(col("b_id"), col("b_emb")), "b_id")
+      top.join(p.scan.select(col("b_id"), col("b_emb")), "b_id")
         .select(col("q_id"), col("b_id"), col("rank"), col("sim"), col("b_emb"))
   }
 
@@ -1005,60 +628,6 @@ object Ann {
   def indexIds(
       spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
     spark.read.parquet(s"$path/base").select("b_id")
-
-  /** Serving-side crash guard for the persisted index family: a
-    * crashed removal (`base__remove_old`) or compaction
-    * (`base__compact_old`) swap leaves some cell's only copy parked
-    * OUTSIDE the lake, and a query would silently answer with that
-    * cell missing — dead wrong for a cell the probe ranks highly.
-    * Shared by [[queryIvfIndex]] and [[Pq.queryIvfPqIndex]]; single
-    * owner of the rule: [[graft.etl.Compact.requireServable]].
-    */
-  private[operators] def requireBaseServable(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val bp = new org.apache.hadoop.fs.Path(s"$path/base")
-    val fs = bp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.etl.Compact.requireServable(fs, bp)
-    // and the INDEX ROOT's parked siblings: a crashed [[refitIvfIndex]]
-    // swap parks the whole original index at `path__refit_old` —
-    // normally path is then absent and every read fails loudly, but an
-    // operator recreating path while the park still holds the only
-    // good copy must not serve silently. Cost: one extra parent-dir
-    // listStatus per serving call — metadata-weight next to the Spark
-    // job the query already pays (the batch-serving shape amortizes
-    // it further), accepted for the correctness guarantee
-    graft.etl.Compact.requireServable(fs, new org.apache.hadoop.fs.Path(path))
-  }
-
-  /** LIVE (members > 0) centroids from a persisted index's codebook
-    * sidecar — single owner of the probe-side read shared by the IVF
-    * and IVF-PQ query paths (probe ranking must stay bit-identical
-    * across the index family).
-    */
-  private[operators] def readLiveCentroids(
-      spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/codebook")
-      .filter(col("members") > 0) // live cells only: see topProbeCells
-      .withColumn("c_nrm", Vectors.norm2(col("centroid")))
-      .select("cell", "centroid", "c_nrm")
-
-  /** Probe + prune for a persisted index: the probe result is needed
-    * TWICE (the pruning cell list and the scoring join). It is
-    * queries x nprobe rows -- NOT driver-bounded when the query set is
-    * a big batch (the normal case for a corpus-vs-corpus ANN pass) --
-    * so it is CACHED, not collected: the only driver materialization
-    * is the distinct cell list, which is <= nlist rows by construction.
-    * scopedCache: Verify/Bench clear the cache between queries;
-    * long-lived callers wrap in [[Dedup.scoped]] like the other
-    * multi-branch operators. Returns (pruning cells, probe frame
-    * joined back to the query columns).
-    */
-  private[operators] def probePruned(
-      q: DataFrame, centDf: DataFrame, nprobe: Int): (Array[Int], DataFrame) = {
-    val tc = Dedup.scopedCache(topProbeCells(q, centDf, nprobe))
-    val cells = tc.select("cell").distinct().collect().map(_.getInt(0))
-    (cells, tc.join(q, "q_id"))
-  }
 
   /** Embedding-cosine near-duplicate pairs at corpus scale: candidate
     * generation via multi-table sign-LSH bucket equi-join, then an exact

@@ -381,7 +381,7 @@ object Bm25 {
       // build/add paths): a bare partitionBy writes tasks × buckets
       // fragment files per pass — the decay compactPostings heals,
       // paid on every build instead of never
-      .transform(Ann.clusterForWrite("bucket"))
+      .transform(IndexLake.clusterForWrite("bucket"))
       .write.partitionBy("bucket").mode("overwrite").parquet(s"$path/postings")
     // the empty-members write and the stats rollup both consume only
     // (doc_id, dl) — cache that 16-byte-per-doc projection so the
@@ -448,7 +448,7 @@ object Bm25 {
       .select(docId.as("doc_id"), analyze(text).as("toks"))
       .withColumn("dl", size(col("toks")).cast("long"))
     positionalPostings(toks, nBuckets)
-      .transform(Ann.clusterForWrite("bucket")) // clustered append (see build)
+      .transform(IndexLake.clusterForWrite("bucket")) // clustered append (see build)
       .write.partitionBy("bucket").mode("append").parquet(s"$path/postings")
     // one tokenize pass for empty-members + stats, not two (see build)
     val dlF = toks.select(col("doc_id"), col("dl")).cache()
@@ -547,15 +547,10 @@ object Bm25 {
     val (nDocs, totalTokens, nBuckets) = readStatsSidecar(spark, path)
     val target = new org.apache.hadoop.fs.Path(s"$path/postings")
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmpRoot = new org.apache.hadoop.fs.Path(target.getParent, target.getName + "__remove_tmp")
-    val oldRoot = new org.apache.hadoop.fs.Path(target.getParent, target.getName + "__remove_old")
-    graft.etl.Compact.clearOrRefuseParked(fs, oldRoot, "removal")
-    // ANY other verb's parked tree (a crashed compactLexIndex swap
-    // lives at postings__compact_old) also blocks: the lake is missing
-    // a bucket's only copy, and an anti-join rewrite against it would
-    // cement the loss
-    graft.etl.Compact.requireServable(fs, target, action = "removal")
-    fs.delete(tmpRoot, true)
+    // refused BEFORE the intent is written: a parked tree (this verb's
+    // crashed swap, or a crashed compactLexIndex's) may hold a bucket's
+    // only copy, and a rewrite against it would cement the loss
+    IndexLake.requireRewritable(fs, target)
     val vicDir = new org.apache.hadoop.fs.Path(target.getParent, target.getName + "__remove_vic")
     fs.delete(vicDir, true)
     try {
@@ -563,36 +558,28 @@ object Bm25 {
         .select(col("doc_id"), size(col("toks")).cast("long").as("dl"))
         .dropDuplicates("doc_id")
         .write.mode("overwrite").parquet(vicDir.toString)
-      removeWithVictims(spark, path, target, fs, tmpRoot, oldRoot,
-        spark.read.parquet(vicDir.toString), nDocs, totalTokens, nBuckets,
-        crashBeforeStatsSidecar)
+      removeWithVictims(spark, path, target, spark.read.parquet(vicDir.toString),
+        nDocs, totalTokens, nBuckets, crashBeforeStatsSidecar)
     } finally fs.delete(vicDir, true)
   }
 
-  /** [[removeFromLexIndex]] after victim materialization: locate
-    * affected buckets from the index, rewrite, gate, swap, decrement
-    * (present victims + trusted empty docs only).
+  /** [[removeFromLexIndex]] after victim materialization: the
+    * decrement (present victims + proven empty docs only), the intent,
+    * then [[executeRemove]].
     */
   private def removeWithVictims(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      target: org.apache.hadoop.fs.Path, fs: org.apache.hadoop.fs.FileSystem,
-      tmpRoot: org.apache.hadoop.fs.Path, oldRoot: org.apache.hadoop.fs.Path,
-      vic: DataFrame, nDocs: Long, totalTokens: Long, nBuckets: Int,
+      target: org.apache.hadoop.fs.Path, vic: DataFrame,
+      nDocs: Long, totalTokens: Long, nBuckets: Int,
       crashBeforeStatsSidecar: Boolean): Unit = {
     val vicIds = vic.select("doc_id")
-    // the victims' postings AS INDEXED — one narrow (doc_id, bucket,
-    // dl) scan; feeds the affected-bucket list (≤ nBuckets driver
-    // rows), the presence gate, AND the token decrement (the INDEXED
-    // dl, not the supplied text's: drifted victim text already cannot
-    // mislocate buckets, and it must not mis-size Σdl either)
-    val vicPost = spark.read.parquet(target.toString)
-      .select("doc_id", "bucket", "dl")
-      .join(vicIds, "doc_id")
-    val affected = vicPost.select("bucket").distinct()
-      .collect().map(_.getInt(0)).sorted
-    // the decrement is COMPUTED before any swap (vicPost is lazy — after
-    // the swaps it would re-read the rewritten lake and see every
-    // present victim as absent) but WRITTEN last (see ORDERING):
+    // the victims' postings AS INDEXED — one narrow (doc_id, dl) scan
+    // feeding the presence gate AND the token decrement (the INDEXED
+    // dl, not the supplied text's: drifted victim text must not
+    // mis-size Σdl; the affected buckets come from the index too, in
+    // the leaf rewrite). The decrement is COMPUTED before any swap
+    // (after the swaps this lazy scan would see every present victim
+    // as absent) but WRITTEN last (see ORDERING):
     //  - victims PRESENT in the postings count with their indexed dl
     //    (every posting row of a doc carries the same dl — max is it);
     //  - victims ABSENT from the postings count only if the index's
@@ -605,9 +592,10 @@ object Bm25 {
     //    record IS — so with the record this case now counts
     //    correctly; only the legacy fallback retains the old
     //    rebuildLexStats-repairable skew.
-    val present = vicPost.groupBy("doc_id").agg(max(col("dl")).as("dl"))
-    val emptyMembers = readEmptyMembers(spark, path)
-    val emptyVictims = emptyMembers match {
+    val present = spark.read.parquet(target.toString)
+      .select("doc_id", "dl").join(vicIds, "doc_id")
+      .groupBy("doc_id").agg(max(col("dl")).as("dl"))
+    val emptyVictims = readEmptyMembers(spark, path) match {
       case Some(members) =>
         members.join(vicIds, "doc_id").select(col("doc_id"), lit(0L).as("dl"))
       case None => // legacy index: no membership record to consult
@@ -619,67 +607,37 @@ object Bm25 {
     val dec = countable.agg(
       count(lit(1)).as("n_docs"),
       coalesce(sum(col("dl")), lit(0L)).as("total_tokens")).head()
-    // nothing indexed anywhere → complete no-op: no intent, no writes
-    // (same graceful degradation as the ANN remove's early return)
-    if (dec.getLong(0) == 0 && affected.isEmpty) return
+    // nothing indexed anywhere (no present victim means no posting to
+    // rewrite either) → complete no-op: no intent, no writes
+    if (dec.getLong(0) == 0) return
     // WRITE-AHEAD INTENT before any mutation (see ORDERING): victim
     // ids + the ABSOLUTE post-remove stats, so any crash window below
     // is resumable to exactly the one-remove state
+    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     writeRemoveIntent(spark, path, fs, vicIds,
       nDocs - dec.getLong(0), totalTokens - dec.getLong(1))
-    executeRemove(spark, path, target, fs, tmpRoot, oldRoot, vicIds,
-      affected, nDocs - dec.getLong(0), totalTokens - dec.getLong(1),
-      nBuckets, crashBeforeStatsSidecar)
+    executeRemove(spark, path, vicIds, nDocs - dec.getLong(0),
+      totalTokens - dec.getLong(1), nBuckets, crashBeforeStatsSidecar)
   }
 
   /** The mutation tail shared by a live remove and an intent resume:
-    * bucket-confined anti-join rewrite + gate + swap, membership
-    * minus, ABSOLUTE stats sidecar, intent cleanup. Every step is
-    * idempotent (an anti-join over already-clean buckets keeps every
-    * row and passes the gate with nv = 0; the membership minus and the
-    * absolute sidecar write converge), which is what makes the intent
-    * replayable from any crash window.
+    * the bucket-confined leaf rewrite ([[IndexLake.rewriteLeaves]] —
+    * affected buckets located from the index, per-bucket gate, swaps),
+    * membership minus, ABSOLUTE stats sidecar, intent cleanup. Every
+    * step is idempotent (the rewrite finds no victim in already-clean
+    * buckets, the membership minus and the absolute sidecar write
+    * converge), which is what makes the intent replayable from any
+    * crash window.
     */
   private def executeRemove(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      target: org.apache.hadoop.fs.Path, fs: org.apache.hadoop.fs.FileSystem,
-      tmpRoot: org.apache.hadoop.fs.Path, oldRoot: org.apache.hadoop.fs.Path,
-      vicIds: DataFrame, affected: Array[Int],
+      spark: org.apache.spark.sql.SparkSession, path: String, vicIds: DataFrame,
       newNDocs: Long, newTotalTokens: Long, nBuckets: Int,
       crashBeforeStatsSidecar: Boolean): Unit = {
-    if (affected.nonEmpty) {
-      val pruned = spark.read.parquet(target.toString)
-        .filter(col("bucket").isin(affected.map(Int.box): _*))
-      pruned.join(vicIds, Seq("doc_id"), "left_anti")
-        .transform(Ann.clusterForWrite("bucket"))
-        .write.partitionBy("bucket").mode("overwrite").parquet(tmpRoot.toString)
-      // per-bucket gate BEFORE any swap: kept must equal read − victims
-      val srcCnt = pruned.select(col("doc_id"), col("bucket"))
-        .join(vicIds.withColumn("__v", lit(1)), Seq("doc_id"), "left")
-        .groupBy("bucket")
-        .agg(count(lit(1)).as("n"), count(col("__v")).as("nv"))
-        .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
-      val tmpFiles = Ann.listDataFiles(fs, tmpRoot.toString)
-      val tmpCnt: Map[Int, Long] =
-        if (tmpFiles.isEmpty) Map.empty
-        else spark.read.parquet(tmpRoot.toString)
-          .groupBy("bucket").agg(count(lit(1)).as("n"))
-          .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      srcCnt.foreach { case (b, (n, nv)) =>
-        val kept = tmpCnt.getOrElse(b, 0L)
-        if (kept != n - nv) {
-          fs.delete(tmpRoot, true)
-          throw new IllegalStateException(
-            s"removal rewrite of $target bucket=$b would lose rows " +
-              s"($n read, $nv victims, $kept rewritten) -- aborted, index untouched")
-        }
-      }
-      // per-bucket two-rename swaps (single owner: Compact); an emptied
-      // bucket's dir disappears — queries prune by bucket value, a
-      // missing dir reads as zero postings
-      graft.etl.Compact.swapRewrittenLeaves(
-        fs, target, tmpRoot, oldRoot, affected.map(b => s"bucket=$b").toSeq)
-    }
+    val target = new org.apache.hadoop.fs.Path(s"$path/postings")
+    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // an emptied bucket's dir disappears — queries prune by bucket
+    // value, a missing dir reads as zero postings
+    IndexLake.rewriteLeaves(spark, fs, target, "doc_id", "bucket", lit(true), vicIds)(_ => ())
     // membership record rewritten BEFORE the sidecar (see ORDERING);
     // re-derived here (not threaded in) so a resume replays it too —
     // minus of already-absent ids is skipped by the emptiness probe
@@ -731,27 +689,12 @@ object Bm25 {
     fs.delete(new org.apache.hadoop.fs.Path(s"$path/remove_intent__tmp"), true)
     if (!fs.exists(dst)) return
     val st = spark.read.parquet(s"$dst/stats").head()
-    val vicIds = spark.read.parquet(s"$dst/victims").select("doc_id")
     val (_, _, nBuckets) = readStatsSidecar(spark, path)
-    val target = new org.apache.hadoop.fs.Path(s"$path/postings")
-    val tmpRoot = new org.apache.hadoop.fs.Path(target.getParent, target.getName + "__remove_tmp")
-    val oldRoot = new org.apache.hadoop.fs.Path(target.getParent, target.getName + "__remove_old")
     // a crash MID-SWAP parks buckets at __remove_old — that still
-    // blocks loudly (the Compact rule): the intent cannot replay a
-    // rewrite over a lake missing a bucket's only copy
-    graft.etl.Compact.clearOrRefuseParked(fs, oldRoot, "removal resume")
-    graft.etl.Compact.requireServable(fs, target, action = "resuming removal on")
-    fs.delete(tmpRoot, true)
-    // the crashed remove may have emptied the lake entirely (last
-    // posted docs removed) — a file-less lake has nothing to replay
-    val affected =
-      if (Ann.listDataFiles(fs, target.toString).isEmpty) Array.empty[Int]
-      else spark.read.parquet(target.toString)
-        .select("doc_id", "bucket").join(vicIds, "doc_id")
-        .select("bucket").distinct().collect().map(_.getInt(0)).sorted
-    executeRemove(spark, path, target, fs, tmpRoot, oldRoot, vicIds,
-      affected, st.getLong(0), st.getLong(1), nBuckets,
-      crashBeforeStatsSidecar = false)
+    // blocks loudly inside the leaf rewrite (the intent cannot replay
+    // a rewrite over a lake missing a bucket's only copy)
+    executeRemove(spark, path, spark.read.parquet(s"$dst/victims").select("doc_id"),
+      st.getLong(0), st.getLong(1), nBuckets, crashBeforeStatsSidecar = false)
   }
 
   /** The `path/empty` membership record, or None for a pre-membership
@@ -764,7 +707,7 @@ object Bm25 {
     val p = new org.apache.hadoop.fs.Path(s"$path/empty")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) None
-    else if (Ann.listDataFiles(fs, p.toString).isEmpty)
+    else if (IndexLake.listDataFiles(fs, p.toString).isEmpty)
       Some(spark.range(0).select(col("id").as("doc_id")))
     else Some(spark.read.parquet(p.toString).select("doc_id"))
   }
@@ -781,36 +724,22 @@ object Bm25 {
       ids: DataFrame, overwrite: Boolean): Unit = {
     val target = new org.apache.hadoop.fs.Path(s"$path/empty")
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!overwrite) {
-      if (fs.exists(target)) ids.write.mode("append").parquet(target.toString)
-    } else {
-      val tmp = new org.apache.hadoop.fs.Path(target.getParent, target.getName + "__tmp")
-      val old = new org.apache.hadoop.fs.Path(target.getParent, target.getName + "__old")
-      fs.delete(tmp, true); fs.delete(old, true)
-      ids.write.mode("overwrite").parquet(tmp.toString)
-      if (fs.exists(target)) graft.etl.Compact.swapInto(fs, tmp, target, old)
-      else require(fs.rename(tmp, target),
-        s"could not place empty-doc membership record at $target")
-    }
+    if (overwrite) IndexLake.placeSidecar(fs, target, ids)
+    else if (fs.exists(target)) ids.write.mode("append").parquet(target.toString)
   }
 
-  /** Rewrite the membership record minus the removed ids (tmp + swap —
-    * the new record derives from reading the old one, so an in-place
-    * overwrite would truncate its own input).
+  /** Rewrite the membership record minus the removed ids (through the
+    * sidecar swap — the new record derives from reading the old one, so
+    * an in-place overwrite would truncate its own input).
     */
   private def rewriteEmptyMembersMinus(
       spark: org.apache.spark.sql.SparkSession, path: String,
       vicIds: DataFrame): Unit = {
     val target = new org.apache.hadoop.fs.Path(s"$path/empty")
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(target.getParent, target.getName + "__tmp")
-    val old = new org.apache.hadoop.fs.Path(target.getParent, target.getName + "__old")
-    fs.delete(tmp, true); fs.delete(old, true)
-    val kept = readEmptyMembers(spark, path)
-      .getOrElse(sys.error(s"$target vanished mid-remove"))
-      .join(vicIds, Seq("doc_id"), "left_anti")
-    kept.write.mode("overwrite").parquet(tmp.toString)
-    graft.etl.Compact.swapInto(fs, tmp, target, old)
+    IndexLake.placeSidecar(target.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      target, readEmptyMembers(spark, path)
+        .getOrElse(sys.error(s"$target vanished mid-remove"))
+        .join(vicIds, Seq("doc_id"), "left_anti"))
   }
 
   /** Indexed-empty membership count, or None on a legacy
@@ -947,15 +876,9 @@ object Bm25 {
       row: org.apache.spark.sql.Row, nBuckets: Int): Unit = {
     import spark.implicits._
     val target = new org.apache.hadoop.fs.Path(s"$path/stats")
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(target.getParent, target.getName + "__tmp")
-    val old = new org.apache.hadoop.fs.Path(target.getParent, target.getName + "__old")
-    fs.delete(tmp, true); fs.delete(old, true)
-    Seq((row.getLong(0), row.getLong(1), nBuckets))
-      .toDF("n_docs", "total_tokens", "n_buckets")
-      .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    if (fs.exists(target)) graft.etl.Compact.swapInto(fs, tmp, target, old)
-    else require(fs.rename(tmp, target), s"could not place stats sidecar at $target")
+    IndexLake.placeSidecar(target.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      target, Seq((row.getLong(0), row.getLong(1), nBuckets))
+        .toDF("n_docs", "total_tokens", "n_buckets").coalesce(1))
   }
 
   /** (n_docs, total_tokens, n_buckets) — bounded 1-row read; fails
@@ -1077,7 +1000,7 @@ object Bm25 {
         // bucket recomputed from the TERM — idempotent over any layout
         src.drop("bucket")
           .withColumn("bucket", bucketOf(col("term"), newBuckets))
-          .transform(Ann.clusterForWrite("bucket"))
+          .transform(IndexLake.clusterForWrite("bucket"))
           .write.partitionBy("bucket").mode("overwrite").parquet(tmp.toString)
         val nTmp = spark.read.parquet(tmp.toString).count()
         if (nTmp != n) {

@@ -193,10 +193,10 @@ object Opq {
     *    rows where removal's per-bucket rewrite still finds them but
     *    the layout contract is broken);
     *  - `rotation/`: the permuted unit-sphere basis
-    *    ([[Pca.saveModel]]) — written LAST as the index-complete
-    *    marker (the [[Pq.buildIvfPqIndex]] write-order discipline): a
-    *    crash before it leaves an index every entry point rejects
-    *    loudly at [[loadOpqSidecars]], never a half-index.
+    *    ([[Pca.saveModel]]) — the index-complete marker
+    *    (lifecycle contract: [[IndexLake]]): a crash before it leaves
+    *    an index every entry point rejects loudly at
+    *    [[loadOpqSidecars]], never a half-index.
     *
     * `fitOn`: the train/add split — a growing index fits rotation and
     * codebooks once on a representative sample and is extended with
@@ -207,120 +207,69 @@ object Opq {
       m: Int = 8, kSub: Int = 256, seed: Long = 42L, maxFit: Long = 20000L,
       nBuckets: Int = IndexBuckets, fitOn: Option[DataFrame] = None): Unit = {
     require(nBuckets >= 1, s"nBuckets must be >= 1, got $nBuckets")
-    val spark = base.sparkSession
-    requireNotIvfFamily(spark, path)
-    // a parked base__*_old tree (crashed removal/compaction swap) must
-    // block the REBUILD too: overwriting around it would leave a fresh
-    // index whose serving guard wedges on the stale park — and the
-    // guard's "recover it" remedy would then mix codes from two
-    // geometries. Refuse until the operator recovers or deletes it.
-    requireOpqServable(spark, path)
-    val b0 = base.select(baseId.as("b_id"), baseVec.as("b_emb"))
+    def scoreable(f: DataFrame) = f.select(baseId.as("b_id"), baseVec.as("b_emb"))
       .withColumn("b_nrm", Vectors.norm2(col("b_emb")))
       .filter(col("b_nrm") > 0)
-    val fitB = fitOn.map(f =>
-      f.select(baseId.as("b_id"), baseVec.as("b_emb"))
-        .withColumn("b_nrm", Vectors.norm2(col("b_emb")))
-        .filter(col("b_nrm") > 0)).getOrElse(b0)
+    val fitB = scoreable(fitOn.getOrElse(base))
     val rot = fitRotation(fitB, m, maxFit)
-    val d = rot.inputDim
-    // in-place rebuild: kill the completeness marker BEFORE touching
-    // the lakes (the Ann.invalidateIndexMarker discipline) so every
-    // crash window refuses loudly instead of pairing a new base with a
-    // stale rotation
-    val rotPath = new org.apache.hadoop.fs.Path(s"$path/rotation")
-    rotPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(rotPath, true)
     val bFit = Dedup.scopedCache(
       Pca.projectUnit(fitB, col("b_emb"), col("b_nrm"), rot, "bp")
         .filter(col("bp").getItem(0).isNotNull))
-    val cb = Pq.fit(bFit, col("b_id"), col("bp"), m, kSub, seed, maxFit)
-    // default build (fitOn empty): fitB IS b0, so the cached projected
-    // frame feeds BOTH the codebook fit and the encode — one corpus
-    // projection pass, knnOpq's exact shape (re-projecting via
-    // opqScoreable would double the dominant build cost). The
-    // train/add split genuinely encodes a different frame and pays its
-    // own projection.
-    val enc = fitOn match {
-      case None => encodeProjected(
-        bFit.filter(col("b_id").isNotNull), cb, d, nBuckets)
-      case Some(_) => opqScoreable(b0, rot, cb, nBuckets)
+    val codec = new OpqCodec(rot, Pq.fit(bFit, col("b_id"), col("bp"), m, kSub, seed, maxFit), nBuckets)
+    val raw = base.select(baseId.as("b_id"), baseVec.as("b_emb"))
+    // default build (fitOn empty): the cached projected fit frame feeds
+    // BOTH the codebook fit and the encode — one corpus projection
+    // pass, knnOpq's exact shape (re-projecting would double the
+    // dominant build cost). The train/add split genuinely encodes a
+    // different frame and pays its own projection.
+    val payload = fitOn match {
+      case None => encodeProjected(bFit.filter(col("b_id").isNotNull), codec)
+      case Some(_) => codec.encode(raw)
     }
-    // cluster by the partition key before the write (the removal
-    // rewrite's writeShards discipline, round-15 extended to build/add):
-    // a bare partitionBy writes tasks × buckets fragment files — at
-    // sf0.1 this single write was 0.8 s of the v25 build, the append
-    // twin 2.2 s, almost all of it file open/commit overhead
-    enc.transform(Ann.clusterForWrite("bucket"))
-      .write.partitionBy("bucket").mode("overwrite").parquet(s"$path/base")
-    // a base whose EVERY row fell to the scoreable gates (classic
-    // cause: fitOn dimension differs from the base's) must not persist
-    // as a silently empty index. Checked via the data-file listing: a
-    // zero-row partitionBy write lands NO files, so a read-based probe
-    // would die in schema inference naming nothing (the hazard the
-    // serving paths guard identically).
-    val bfs = new org.apache.hadoop.fs.Path(s"$path/base")
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(Ann.listDataFiles(bfs, s"$path/base").nonEmpty,
-      s"no base row was OPQ-scoreable for $path -- does the base embedding " +
-        s"dimension match the fitted rotation (dim $d)?")
-    import spark.implicits._
-    (for (j <- 0 until cb.m; c <- cb.tables(j).indices)
-      yield (j, c, cb.tables(j)(c).toSeq, true))
-      .toDF("subspace", "code", "centroid_d", "rotated")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/pq")
-    // meta persists the EFFECTIVE kSub (a small fit sample clamps the
-    // requested one — Pq.fitFromSample) so loadOpqSidecars can demand
-    // exact equality with the loaded code table
-    Seq((d, m, cb.tables(0).length, nBuckets))
-      .toDF("d", "m", "k_sub", "n_buckets")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    Pca.saveModel(spark, rot, s"$path/rotation") // marker LAST
+    IndexLake.build(path, codec, raw, payload)
   }
 
-  /** The shared encode pass of the build and add paths: project onto
-    * the persisted rotation, PQ-encode, carry the reconstruction norm,
-    * assign the id bucket. Row universe identical to [[knnOpq]]'s
+  /** The OPQ codec: rotate with the persisted basis, PQ-encode, carry
+    * the reconstruction norm, assign the id bucket — payload (b_id,
+    * codes, d_nrm; bucket). Row universe identical to [[knnOpq]]'s
     * (zero-norm / ragged / null-coding rows drop); null ids drop too —
-    * an id-keyed index cannot serve or retention-delete them.
+    * an id-keyed index cannot serve or retention-delete them. Sidecars:
+    * `pq/` (rotated-space codebooks, `rotated` layout column), `meta/`,
+    * and `rotation/` — the index-complete marker, written last.
     */
-  private def opqScoreable(
-      b0: DataFrame, rot: Pca.PcaModel, cb: Pq.Codebooks,
-      nBuckets: Int): DataFrame =
-    encodeProjected(
-      Pca.projectUnit(
-        b0.filter(col("b_id").isNotNull),
-        col("b_emb"), col("b_nrm"), rot, "bp")
-        .filter(col("bp").getItem(0).isNotNull),
-      cb, rot.inputDim, nBuckets)
+  private class OpqCodec(val rot: Pca.PcaModel, val cb: Pq.Codebooks, val nBuckets: Int)
+      extends IndexLake.Codec(IndexLake.Opq, Array.empty) {
+    def encode(b: DataFrame): DataFrame =
+      encodeProjected(
+        Pca.projectUnit(
+          b.filter(col("b_id").isNotNull)
+            .withColumn("b_nrm", Vectors.norm2(col("b_emb")))
+            .filter(col("b_nrm") > 0),
+          col("b_emb"), col("b_nrm"), rot, "bp")
+          .filter(col("bp").getItem(0).isNotNull),
+        this)
+    def gates: String =
+      s"null id, null or zero-norm vector, dimension != index dim ${rot.inputDim}, or uncodable"
+    override def sidecars(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
+      import spark.implicits._
+      Pq.writePqTables(spark, path, cb, "rotated")
+      // meta persists the EFFECTIVE kSub (a small fit sample clamps the
+      // requested one — Pq.fitFromSample) so loadOpqSidecars can demand
+      // exact equality with the loaded code table
+      Seq((rot.inputDim, cb.m, cb.tables(0).length, nBuckets))
+        .toDF("d", "m", "k_sub", "n_buckets")
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+      Pca.saveModel(spark, rot, s"$path/rotation") // marker LAST
+    }
+  }
 
-  /** The encode tail over an ALREADY-projected frame (`bp` column) —
-    * split out so [[buildOpqIndex]]'s default path can reuse the
-    * cached fit projection instead of re-projecting the corpus.
-    */
-  private def encodeProjected(
-      proj: DataFrame, cb: Pq.Codebooks, d: Int, nBuckets: Int): DataFrame = {
-    val zeroCent = typedLit(Seq.fill(d)(0.0f))
-    Pq.encode(proj, col("b_id"), col("bp"), cb)
-      .withColumn("d_nrm", Pq.reconNormExpr(col("codes"), zeroCent, cb))
-      .withColumn("bucket", bucketExpr(col("b_id"), nBuckets))
+  /** The encode tail over an ALREADY-projected frame (`bp` column). */
+  private def encodeProjected(proj: DataFrame, codec: OpqCodec): DataFrame =
+    Pq.encode(proj, col("b_id"), col("bp"), codec.cb)
+      .withColumn("d_nrm",
+        Pq.reconNormExpr(col("codes"), typedLit(Seq.fill(codec.rot.inputDim)(0.0f)), codec.cb))
+      .withColumn("bucket", bucketExpr(col("b_id"), codec.nBuckets))
       .select("b_id", "codes", "d_nrm", "bucket")
-  }
-
-  /** Directed misuse guard, symmetric with
-    * [[Ann.requirePqMarker]]: an IVF-family index at `path` shares
-    * nothing with the flat OPQ layout, and the wrong verb must name
-    * the right one instead of failing somewhere deep.
-    */
-  private def requireNotIvfFamily(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(!fs.exists(new org.apache.hadoop.fs.Path(s"$path/codebook")),
-      s"$path carries a coarse-codebook sidecar -- an IVF-family index; " +
-        "use the Ann.*/Pq.*/Sq.* verbs, not the OPQ ones")
-  }
 
   /** The persisted rotation + codebooks + layout meta of an OPQ index —
     * bounded collects, validated before use; refuses a missing
@@ -331,10 +280,7 @@ object Opq {
   private[operators] def loadOpqSidecars(
       spark: org.apache.spark.sql.SparkSession,
       path: String): (Pca.PcaModel, Pq.Codebooks, Int) = {
-    requireNotIvfFamily(spark, path)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(new org.apache.hadoop.fs.Path(s"$path/rotation")),
+    require(IndexLake.fsOf(spark, path).exists(new org.apache.hadoop.fs.Path(s"$path/rotation")),
       s"$path has no rotation sidecar -- not a completed OPQ index " +
         "(a crashed buildOpqIndex leaves this state; rebuild)")
     val rot = Pca.loadModel(spark, s"$path/rotation")
@@ -379,86 +325,48 @@ object Opq {
       source: DataFrame, srcId: Column, srcVec: Column,
       queries: DataFrame, qId: Column, qVec: Column,
       k: Int, shortlist: Int = 0): DataFrame = {
-    requireOpqServable(spark, path)
+    IndexLake.requireServing(spark, path, IndexLake.Opq, "query")
     val (rot, cb, _) = loadOpqSidecars(spark, path)
     val sl = Pq.shortlistSize(shortlist, k)
     val q0 = Ann.validQueries(queries, qId, qVec)
     Ann.requireQueryDim(q0, rot.inputDim)
     val q = Dedup.scopedCache(projectQueries(q0, rot))
     // a fully-emptied base (every id retention-deleted) has no data
-    // files and would die in schema inference with an error naming
-    // neither the index nor the state — refuse by name instead
-    val bpth = new org.apache.hadoop.fs.Path(s"$path/base")
-    val bfs = bpth.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(bfs.exists(bpth) && Ann.listDataFiles(bfs, s"$path/base").nonEmpty,
-      s"the OPQ index at $path holds zero code rows (every id removed?) " +
-        "-- rebuild or add rows before serving")
-    val enc = spark.read.parquet(s"$path/base")
+    // files and dies in schema inference with an error naming neither
+    // the index nor the state — refuse by name instead
+    val enc =
+      try spark.read.parquet(s"$path/base")
+      catch {
+        case e: org.apache.spark.sql.AnalysisException if graft.etl.Compact.emptyLakeRead(e) =>
+          throw new IllegalArgumentException(s"the OPQ index at $path holds zero code rows " +
+            "(every id removed?) -- rebuild or add rows before serving", e)
+      }
     // shared projection + ADC arithmetic owners with knnOpq —
     // persisted ≡ on-the-fly holds by construction
     val short = Ann.topkPerQuery(adcL2Sims(enc, qLutOf(q, cb), cb), sl)
-    val src = source.select(srcId.as("b_id"), srcVec.as("b_emb"))
-      .withColumn("b_nrm", Vectors.norm2(col("b_emb")))
-      .filter(col("b_nrm") > 0)
-    Pq.rerankExact(short, src,
-      q.select("q_id", "q_emb", "qp_nrm"), k, requireFullCoverage = true)
-  }
-
-  /** Serving/append-side crash guard — the [[Ann.requireBaseServable]]
-    * posture for the flat layout: a parked `base__*_old` sibling may
-    * hold a bucket's only copy after a crashed removal/compaction swap.
-    */
-  private def requireOpqServable(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val bp = new org.apache.hadoop.fs.Path(s"$path/base")
-    val fs = bp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.etl.Compact.requireServable(fs, bp)
-    graft.etl.Compact.requireServable(fs, new org.apache.hadoop.fs.Path(path))
+    Pq.rerankSource(short, source, srcId, srcVec, q.select("q_id", "q_emb", "qp_nrm"), k)
   }
 
   /** Incrementally extend a persisted [[buildOpqIndex]] index: new rows
     * are rotated AND encoded with the PERSISTED basis + codebooks (no
     * re-fit — build+add equals build-all-with-the-same-fit), appended
-    * to their id buckets. Fail-loud on a silently vanished increment
-    * (wrong embedding dimension is the classic cause), the
-    * [[Pq.addToIvfPqIndex]] discipline.
+    * to their id buckets. Lifecycle contract: [[IndexLake]].
     */
   def addToOpqIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      rows: DataFrame, id: Column, vec: Column): Unit = {
-    requireOpqServable(spark, path)
-    val (rot, cb, nBuckets) = loadOpqSidecars(spark, path)
-    val basePath = s"$path/base"
-    val fs = new org.apache.hadoop.fs.Path(basePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val before = Ann.listDataFiles(fs, basePath)
-    val b0 = rows.select(id.as("b_id"), vec.as("b_emb"))
-      .withColumn("b_nrm", Vectors.norm2(col("b_emb")))
-      .filter(col("b_nrm") > 0)
-    opqScoreable(b0, rot, cb, nBuckets)
-      .transform(Ann.clusterForWrite("bucket")) // clustered append (see build)
-      .write.partitionBy("bucket").mode("append").parquet(basePath)
-    if ((Ann.listDataFiles(fs, basePath) -- before).isEmpty)
-      require(rows.limit(1).collect().isEmpty,
-        s"no row of a non-empty increment was OPQ-scoreable for $path -- " +
-          s"wrong embedding dimension (index dim ${rot.inputDim})? nothing was added")
-  }
+      rows: DataFrame, id: Column, vec: Column): Unit =
+    IndexLake.add(spark, path, IndexLake.Opq, rows.select(id.as("b_id"), vec.as("b_emb"))) { _ =>
+      val (rot, cb, nBuckets) = loadOpqSidecars(spark, path)
+      new OpqCodec(rot, cb, nBuckets)
+    }
 
-  /** Delete ids from a persisted [[buildOpqIndex]] index — the
-    * retention verb for the flat layout, sharing
-    * [[Ann.removeFromIndexBase]]'s safety-critical core (victim
-    * materialization against nondeterministic inputs, surgical
-    * per-leaf anti-join rewrites, the kept == read − victims gate
-    * before any swap, park-then-swap crash discipline) with the
-    * partition key `bucket` and no occupancy sidecar — a flat layout
-    * has no probe structure to keep honest. An emptied or absent base
-    * is a no-op (nothing holds victims).
+  /** Delete ids from a persisted [[buildOpqIndex]] index — the retention
+    * verb for the flat layout ([[IndexLake.remove]] with the partition
+    * key `bucket` and no occupancy: a flat layout has no probe
+    * structure to keep honest). An emptied or absent base is a no-op.
     */
   def removeFromOpqIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      victims: DataFrame, vicId: Column): Unit = {
-    loadOpqSidecars(spark, path) // completed-OPQ-index gate (and not IVF)
-    Ann.removeFromIndexBase(spark, path, victims, vicId,
-      scoreable = lit(true), partCol = "bucket", withOccupancy = false)
-  }
+      victims: DataFrame, vicId: Column): Unit =
+    IndexLake.remove(spark, path, IndexLake.Opq, victims, vicId)
 }

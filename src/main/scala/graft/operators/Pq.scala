@@ -214,16 +214,19 @@ object Pq {
     Ann.topkPerQuery(scored, k)
   }
 
-  /** Build a PERSISTED IVF-PQ index at `path` — the compressed
-    * build-once/query-many serving shape for 10^9+ vectors: the base
-    * stores ONLY (b_id, codes, d_nrm) partitioned by coarse cell, so a
-    * query's probed-cell scan reads ~m bytes per candidate instead of
-    * 4·D (the full vectors stay in the SOURCE table and are joined
-    * back only for the exact-rerank shortlist). Layout:
-    * `path/base` (b_id, codes, d_nrm; cell = partition key),
-    * `path/codebook` (the coarse sidecar, occupancy = PQ-scoreable
-    * members), `path/pq` (one row per (subspace, code): the PQ tables).
+  /** [[rerankExact]] of a persisted index's shortlist against `source`,
+    * the table holding the ORIGINAL vectors: it must cover every
+    * indexed id (enforced inside the rerank join).
     */
+  private[operators] def rerankSource(
+      short: DataFrame, source: DataFrame, srcId: Column, srcVec: Column,
+      q: DataFrame, k: Int): DataFrame =
+    rerankExact(short,
+      source.select(srcId.as("b_id"), srcVec.as("b_emb"))
+        .withColumn("b_nrm", Vectors.norm2(col("b_emb")))
+        .filter(col("b_nrm") > 0),
+      q, k, requireFullCoverage = true)
+
   /** The coarse centroids as a FLOAT array-of-arrays literal — the
     * IVF-PQ paths' single owner of the residual arithmetic's centroid
     * operand. The float cast must match [[Ann]]'s `codebookFrame`
@@ -379,65 +382,66 @@ object Pq {
     */
   private def pqSeed(seed: Long): Long = seed + 1000003L
 
+  /** Build a PERSISTED IVF-PQ index at `path` — the compressed
+    * build-once/query-many serving shape for 10^9+ vectors: the base
+    * stores ONLY (b_id, codes, d_nrm) partitioned by coarse cell, so a
+    * query's probed-cell scan reads ~m bytes per candidate instead of
+    * 4·D (the full vectors stay in the SOURCE table and are joined
+    * back only for the exact-rerank shortlist). Layout:
+    * `path/base` (b_id, codes, d_nrm; cell = partition key),
+    * `path/codebook` (the coarse sidecar, occupancy = PQ-scoreable
+    * members), `path/pq` (one row per (subspace, code): the PQ tables,
+    * [[writePqTables]]). `fitOn`: the train/add split, as in
+    * [[Ann.buildIvfIndex]]. Lifecycle contract: [[IndexLake]].
+    */
   def buildIvfPqIndex(
       base: DataFrame, baseId: Column, baseVec: Column, path: String,
       nlist: Int = 16, m: Int = 8, kSub: Int = 256,
       seed: Long = 42L, maxFit: Long = 100000L,
       fitOn: Option[DataFrame] = None): Unit = {
     val b0 = base.select(baseId.as("b_id"), baseVec.as("b_emb"))
-    // fitOn: the train/add split, as in Ann.buildIvfIndex — a growing
-    // index trains once on a representative sample and is extended
-    // with addToIvfPqIndex, never re-fit per increment
     val fitB = fitOn.map(_.select(baseId.as("b_id"), baseVec.as("b_emb"))).getOrElse(b0)
     val sample = Ann.sampleVectors(fitB, maxFit)
     val coarse = Ann.fitCodebookFromSample(sample, nlist, seed)
     // PQ codebooks are fit on RESIDUALS (see residExpr) — one shared
     // sample scan still feeds both quantizers
-    val cb = fitFromSample(residualSample(sample, coarse), m, kSub, pqSeed(seed))
-    val spark = base.sparkSession
-    Ann.invalidateIndexMarker(spark, path) // in-place rebuild: see its scaladoc
-    pqScoreable(b0, coarse, cb)
-      .select("b_id", "codes", "d_nrm", "cell")
-      // cluster by the partition key before the write (the removal
-      // rewrite's writeShards discipline, round-15 extended to
-      // build/add): one file per cell instead of tasks × cells
-      .transform(Ann.clusterForWrite("cell"))
-      .write.partitionBy("cell").mode("overwrite").parquet(s"$path/base")
-    // occupancy of PQ-SCOREABLE members from the WRITTEN files (every
-    // written row is scoreable by construction of the filters above)
-    val members = spark.read.parquet(s"$path/base")
-      .groupBy("cell").agg(count(lit(1)).as("__m"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    // a base whose EVERY row fell to the PQ-scoreable gates (classic
-    // cause: fitOn frame with a different embedding dimension than the
-    // base) must not persist as a silently empty index
-    require(members.nonEmpty,
-      s"no base row was PQ-scoreable for $path -- does the base embedding " +
-        s"dimension match the fitted codebooks (dim ${cb.m * cb.sub})?")
-    // WRITE ORDER: base → pq → codebook sidecar. The pq dir doubles as
-    // the index-type marker Ann.addToIvfIndex refuses on, and the
-    // sidecar is what every reader/appender loads first — so the
-    // sidecar must land LAST (the index-complete marker). A crash
-    // before it leaves an index every entry point rejects loudly
-    // (readCodebookSidecar: no codebook dir), never a half-index that
-    // passes the plain-IVF guard and accepts vector-row appends.
-    import spark.implicits._
-    // `residual = true` is a LAYOUT VERSION marker: an index whose pq
-    // rows lack it was built with raw (pre-residual) encoding, and
-    // decoding its codes with the residual arithmetic would silently
-    // corrupt every score — loadPqTables refuses such indexes
-    (for (j <- 0 until cb.m; c <- cb.tables(j).indices)
-      yield (j, c, cb.tables(j)(c).toSeq, true))
-      .toDF("subspace", "code", "centroid_d", "residual")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/pq")
-    Ann.writeCodebookSidecar(spark, path, coarse, members, atomicSwap = false)
+    val codec = ivfPqCodec(coarse,
+      fitFromSample(residualSample(sample, coarse), m, kSub, pqSeed(seed)))
+    IndexLake.build(path, codec, b0, codec.encode(b0))
   }
 
-  /** KNN against a persisted [[buildIvfPqIndex]] index: probe ranks
-    * from the codebook sidecar, a partition-pruned CODES scan of only
-    * the probed cell directories (the <= nlist cell list is the one
-    * driver collect, as in [[Ann.queryIvfIndex]]), compressed-domain
+  /** The IVF-PQ codec: the [[pqScoreable]] row universe as the codes
+    * payload (b_id, codes, d_nrm; cell), PQ tables in `pq/`.
+    */
+  private def ivfPqCodec(centroids: Array[Array[Double]], cb: Codebooks): IndexLake.Codec =
+    new IndexLake.Codec(IndexLake.IvfPq, centroids) {
+      def encode(b: DataFrame): DataFrame =
+        pqScoreable(b, coarse, cb).select("b_id", "codes", "d_nrm", "cell")
+      def gates: String =
+        s"null or zero-norm vector, dimension != index dim ${cb.m * cb.sub}, or uncodable"
+      override def sidecars(spark: org.apache.spark.sql.SparkSession, path: String): Unit =
+        writePqTables(spark, path, cb, "residual")
+    }
+
+  /** Persist PQ tables at `path/pq`: one row per (subspace, code), plus
+    * a constant LAYOUT VERSION column (`residual` for IVF-PQ, `rotated`
+    * for OPQ) — codes decoded in the wrong geometry would silently
+    * corrupt every score, so [[parsePqTables]] refuses a table without
+    * the column its family expects.
+    */
+  private[operators] def writePqTables(
+      spark: org.apache.spark.sql.SparkSession, path: String,
+      cb: Codebooks, markerCol: String): Unit = {
+    import spark.implicits._
+    (for (j <- 0 until cb.m; c <- cb.tables(j).indices)
+      yield (j, c, cb.tables(j)(c).toSeq, true))
+      .toDF("subspace", "code", "centroid_d", markerCol)
+      .coalesce(1)
+      .write.mode("overwrite").parquet(s"$path/pq")
+  }
+
+  /** KNN against a persisted [[buildIvfPqIndex]] index: the shared
+    * probed-cell CODES scan ([[IndexLake.probe]]), compressed-domain
     * shortlist, then exact rerank against `source` — the table holding
     * the ORIGINAL vectors, joined by id for shortlist pairs only.
     * `source` must contain every indexed id (it is the corpus the
@@ -457,53 +461,25 @@ object Pq {
       queries: DataFrame, qId: Column, qVec: Column,
       k: Int, nprobe: Int = 4, shortlist: Int = 0,
       eligible: Option[(DataFrame, Column)] = None): DataFrame = {
-    Ann.requireBaseServable(spark, path) // crashed-swap guard: see Ann
     val sl = shortlistSize(shortlist, k)
+    val p = IndexLake.probe(spark, path, IndexLake.IvfPq, queries, qId, qVec, nprobe, eligible)
     val cb = loadPqTables(spark, path)
-    // ONE sidecar read serves both the probe frame and the residual
-    // decode: the live probe centroids are re-derived from the
-    // collected DOUBLE codebook through the same float cast the
-    // sidecar's own float column was written with (codebookFrame is
-    // the single owner), so probe ranking stays bit-identical to
-    // Ann.readLiveCentroids — without a second parquet job per call
-    val (coarse, members) = Ann.readCodebookSidecar(spark, path)
-    val live = members.collect { case (c, m) if m > 0 => c }.toSeq
-    val centDf = Ann.centroidFrame(spark, coarse) // (cell, centroid, c_nrm)
-      .filter(col("cell").isin(live.map(Int.box): _*)) // live cells: see topProbeCells
-    val q = Ann.validQueries(queries, qId, qVec)
-    Ann.requireQueryDim(q, cb.m * cb.sub)
-    val (cells, probed) = Ann.probePruned(q, centDf, nprobe)
     // ADC scoring: qc = q·centroid(cell) and the per-query LUT are
     // computed on the BOUNDED probe frame (≤ queries × nprobe rows) and
     // broadcast; the probed-cell scan then reads (b_id, codes, d_nrm)
     // and pays m lookups per candidate — no reconstruction, and the
-    // nlist × D centroid literal stays OUT of the scan-side task binary
-    val probedQ = probed
-      .withColumn("qc", Vectors.dot(col("q_emb"), centCol(col("cell"), coarse)))
+    // nlist × D centroid literal stays OUT of the scan-side task binary.
+    // An `eligible` semi-join lands on the COMPRESSED scan, before the
+    // shortlist, so no shortlist slot is wasted on an ineligible id
+    val probedQ = p.probed
+      .withColumn("qc", Vectors.dot(col("q_emb"), centCol(col("cell"), p.coarse)))
       .withColumn("lut", lutExpr(col("q_emb"), cb))
-    val pruned = spark.read.parquet(s"$path/base")
-      .filter(col("cell").isin(cells.map(Int.box): _*))
-    // filtered search (see Ann.queryIvfIndex's `eligible` scaladoc):
-    // the semi-join lands on the COMPRESSED scan, before the shortlist
-    // — so shortlist slots are never wasted on ineligible candidates
-    // (a post-filter would starve the rerank of eligible neighbors)
-    val filtered = eligible match {
-      case Some((el, elId)) =>
-        pruned.join(el.select(elId.as("b_id")), Seq("b_id"), "left_semi")
-      case None => pruned
-    }
-    val approx = filtered
+    val approx = p.scan
       .join(broadcast(probedQ), "cell")
       .select(col("q_id"), col("b_id"),
         ((col("qc") + adcExpr(col("codes"), col("lut"), cb)) /
           (col("d_nrm") * col("qp_nrm"))).as("sim"))
-    val short = Ann.topkPerQuery(approx, sl)
-    val src = source.select(srcId.as("b_id"), srcVec.as("b_emb"))
-      .withColumn("b_nrm", Vectors.norm2(col("b_emb")))
-      .filter(col("b_nrm") > 0)
-    // the 'source holds every indexed id' contract is enforced INSIDE
-    // the rerank join (requireFullCoverage) — zero extra source passes
-    rerankExact(short, src, q, k, requireFullCoverage = true)
+    rerankSource(Ann.topkPerQuery(approx, sl), source, srcId, srcVec, p.q, k)
   }
 
   /** The persisted PQ tables of an IVF-PQ index — bounded collect of
@@ -547,66 +523,23 @@ object Pq {
   /** Incrementally extend a persisted [[buildIvfPqIndex]] index: new
     * rows are assigned AND encoded with the PERSISTED codebooks (no
     * re-fit of either quantizer — build+add equals
-    * build-all-with-the-same-codebooks), appended to the cell
-    * partitions as codes, and the occupancy sidecar refreshed from the
-    * files this add wrote, exactly like [[Ann.addToIvfIndex]] (same
-    * listing-diff delta, same two-rename sidecar swap, same
-    * not-transactional caveat).
+    * build-all-with-the-same-codebooks). Lifecycle contract: [[IndexLake]].
     */
   def addToIvfPqIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      rows: DataFrame, id: Column, vec: Column): Unit = {
-    // directed misuse guard, symmetric with Ann.addToIvfIndex's: a
-    // PLAIN IVF index shares the codebook layout but has no pq sidecar
-    Ann.requirePqMarker(spark, path, expectPq = true, otherVerb = "Ann.addToIvfIndex")
-    val (coarse, prevMembers) = Ann.readCodebookSidecar(spark, path)
-    val cb = loadPqTables(spark, path)
-    val basePath = s"$path/base"
-    val fs = new org.apache.hadoop.fs.Path(basePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // listing-diff occupancy: count exactly the files this add wrote
-    // (see addToIvfIndex — a lazy-plan recount could drift from disk)
-    val before = Ann.listDataFiles(fs, basePath)
-    pqScoreable(rows.select(id.as("b_id"), vec.as("b_emb")), coarse, cb)
-      .select("b_id", "codes", "d_nrm", "cell")
-      .transform(Ann.clusterForWrite("cell")) // clustered append (see build)
-      .write.partitionBy("cell").mode("append").parquet(basePath)
-    val newFiles = (Ann.listDataFiles(fs, basePath) -- before).toSeq
-    val delta =
-      if (newFiles.isEmpty) Map.empty[Int, Long]
-      else spark.read.option("basePath", basePath).parquet(newFiles: _*)
-        .groupBy("cell").agg(count(lit(1)).as("__m"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    // fail-loud on a silently vanished increment: a non-empty input
-    // whose EVERY row fell to the PQ-scoreable gates (wrong embedding
-    // dimension is the classic cause) must not report success — the
-    // ANN family's worst failure mode is the silent drop
-    if (delta.isEmpty)
-      require(rows.limit(1).collect().isEmpty,
-        s"no row of a non-empty increment was PQ-scoreable for $path -- wrong " +
-          s"embedding dimension (index dim ${cb.m * cb.sub})? nothing was added")
-    val members = coarse.indices
-      .map(c => c -> (prevMembers.getOrElse(c, 0L) + delta.getOrElse(c, 0L))).toMap
-    Ann.writeCodebookSidecar(spark, path, coarse, members, atomicSwap = true)
-  }
+      rows: DataFrame, id: Column, vec: Column): Unit =
+    IndexLake.add(spark, path, IndexLake.IvfPq, rows.select(id.as("b_id"), vec.as("b_emb")))(
+      coarse => ivfPqCodec(coarse, loadPqTables(spark, path)))
 
-  /** Delete ids from a persisted [[buildIvfPqIndex]] index — the
-    * retention verb for the compressed index, sharing
-    * [[Ann.removeFromIndexBase]] (surgical per-cell anti-join rewrite,
-    * park-then-swap, pre-swap row-count gate, occupancy decrement,
-    * immutable codebooks — see [[Ann.removeFromIvfIndex]]). After a
-    * retention delete is applied to BOTH the source table and the index
-    * (this call), [[queryIvfPqIndex]]'s drift guard is satisfied again —
-    * previously the only options were serving with a hard-failing guard
-    * or a full rebuild. Every persisted codes row is PQ-scoreable by
-    * construction, so occupancy counts plain rows.
+  /** Delete ids from a persisted [[buildIvfPqIndex]] index
+    * ([[IndexLake.remove]]). After a retention delete is applied to BOTH
+    * the source table and the index, [[queryIvfPqIndex]]'s drift guard
+    * is satisfied again.
     */
   def removeFromIvfPqIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      victims: DataFrame, vicId: Column): Unit = {
-    Ann.requirePqMarker(spark, path, expectPq = true, otherVerb = "Ann.removeFromIvfIndex")
-    Ann.removeFromIndexBase(spark, path, victims, vicId, scoreable = lit(true))
-  }
+      victims: DataFrame, vicId: Column): Unit =
+    IndexLake.remove(spark, path, IndexLake.IvfPq, victims, vicId)
 
   /** IVF+PQ (the FAISS IVFADC composition): the coarse quantizer prunes
     * WHICH rows are scanned (candidates = probed cells only, shuffle ∝

@@ -95,23 +95,6 @@ object Sq {
     })
   }
 
-  /** Approximate top-k cosine via SQ8 shortlist + EXACT rerank (the
-    * [[Pq.knnPq]] deployment with the closed-form quantizer):
-    *
-    *  1. gate base and queries to scoreable fixed-dim vectors;
-    *  2. fit per-dimension [min, max] (one aggregate);
-    *  3. encode + reconstruct the base (narrow projection), score all
-    *     (base × broadcast queries) pairs on the RECONSTRUCTION
-    *     (asymmetric distance — the query stays full-precision), and
-    *     keep a deterministic per-query shortlist (ADC score desc,
-    *     id asc — the k-buffer tail, no Window);
-    *  4. re-score shortlist pairs exactly on the originals; report
-    *     top k true cosines.
-    *
-    * Every stage is deterministic arithmetic, so the v15 oracle
-    * replays the WHOLE pipeline — shortlist membership included, which
-    * the PQ paths cannot offer (their codebooks are engine-side).
-    */
   /** Shared gate + fit + encode stanza of [[knnSq8]] and
     * [[knnIvfSq8]] — SINGLE owner because the v15 oracle replays this
     * arithmetic token-for-token and the two paths' bit-equality spec
@@ -134,27 +117,50 @@ object Sq {
     */
   private def encodedBase(
       base: DataFrame, baseId: Column, baseVec: Column): (DataFrame, DataFrame, Int, Sq8Stats) = {
-    val b0 = base.select(baseId.as("b_id"), baseVec.as("b_emb"))
-      .filter(col("b_emb").isNotNull &&
-        forall(col("b_emb"), x =>
-          x.isNotNull && !isnan(x) && abs(x) < lit(Float.PositiveInfinity)))
-      .withColumn("b_nrm", Vectors.norm2(col("b_emb")))
-      .filter(col("b_nrm") > 0)
+    val b0 = finiteScoreable(base.select(baseId.as("b_id"), baseVec.as("b_emb")))
     val dRow = b0.select(min(size(col("b_emb"))).as("d")).head()
     require(!dRow.isNullAt(0), "SQ8: no scoreable base vectors")
     val d = dRow.getInt(0)
     val b = b0.filter(size(col("b_emb")) === d)
-
     val st = fitStats(b, col("b_emb"), d)
-    val enc = b
-      .withColumn("codes", encodeExpr(col("b_emb"), st))
+    (b, sq8Encode(b, st), d, st)
+  }
+
+  /** Gates (1) and (2) of [[encodedBase]]: finite elements, non-zero norm. */
+  private def finiteScoreable(b: DataFrame): DataFrame =
+    b.filter(col("b_emb").isNotNull &&
+        forall(col("b_emb"), x =>
+          x.isNotNull && !isnan(x) && abs(x) < lit(Float.PositiveInfinity)))
+      .withColumn("b_nrm", Vectors.norm2(col("b_emb")))
+      .filter(col("b_nrm") > 0)
+
+  /** Codes + reconstruction of dimension-gated rows, keeping only
+    * codable rows with a non-zero reconstruction.
+    */
+  private def sq8Encode(b: DataFrame, st: Sq8Stats): DataFrame =
+    b.withColumn("codes", encodeExpr(col("b_emb"), st))
       .filter(forall(col("codes"), c => c.isNotNull))
       .withColumn("recon", decodeExpr(col("codes"), st))
       .withColumn("r_nrm", Vectors.norm2(col("recon")))
       .filter(col("r_nrm") > 0)
-    (b, enc, d, st)
-  }
 
+  /** Approximate top-k cosine via SQ8 shortlist + EXACT rerank (the
+    * [[Pq.knnPq]] deployment with the closed-form quantizer):
+    *
+    *  1. gate base and queries to scoreable fixed-dim vectors;
+    *  2. fit per-dimension [min, max] (one aggregate);
+    *  3. encode + reconstruct the base (narrow projection), score all
+    *     (base × broadcast queries) pairs on the RECONSTRUCTION
+    *     (asymmetric distance — the query stays full-precision), and
+    *     keep a deterministic per-query shortlist (ADC score desc,
+    *     id asc — the k-buffer tail, no Window);
+    *  4. re-score shortlist pairs exactly on the originals; report
+    *     top k true cosines.
+    *
+    * Every stage is deterministic arithmetic, so the v15 oracle
+    * replays the WHOLE pipeline — shortlist membership included, which
+    * the PQ paths cannot offer (their codebooks are engine-side).
+    */
   def knnSq8(
       base: DataFrame, baseId: Column, baseVec: Column,
       queries: DataFrame, qId: Column, qVec: Column,
@@ -253,9 +259,8 @@ object Sq {
     * for the exact-rerank shortlist only. Layout:
     * `path/base` (b_id, codes, r_nrm; cell = partition key),
     * `path/sq` (one row per dimension: mn, mx — the closed-form
-    * quantizer, also this layout's type marker for the cross-verb
-    * guards), `path/codebook` (coarse sidecar + occupancy, written
-    * LAST — the index-complete marker, the family's crash ordering).
+    * quantizer, also this layout's kind marker), `path/codebook`
+    * (coarse sidecar + occupancy). Lifecycle contract: [[IndexLake]].
     *
     * The SQ8 stats and the coarse codebook are fit on the SAME gated
     * base [[knnIvfSq8]] fits on (single owner: the encodedBase gates),
@@ -265,38 +270,34 @@ object Sq {
   def buildIvfSq8Index(
       base: DataFrame, baseId: Column, baseVec: Column, path: String,
       nlist: Int = 16, seed: Long = 42L, maxFit: Long = 100000L): Unit = {
-    val spark = base.sparkSession
-    val (b, enc, d, st) = encodedBase(base, baseId, baseVec)
-    val codebook = Ann.fitCodebook(
-      b.select(col("b_id"), col("b_emb")), nlist, seed, maxFit)
-    // in-place REBUILD: the old index-complete marker must stop being
-    // valid BEFORE the lakes change — a crash after the base overwrite
-    // would otherwise pair new codes with STALE sq stats + codebook
-    // and serve silently wrong results (Ann.invalidateIndexMarker)
-    Ann.invalidateIndexMarker(spark, path)
-    enc
-      .withColumn("cell", Ann.cellExpr(col("b_emb"), codebook))
-      .filter(col("cell").isNotNull)
-      .select("b_id", "codes", "r_nrm", "cell")
-      // cluster by the partition key before the write (the removal
-      // rewrite's writeShards discipline, round-15 extended to
-      // build/add): one file per cell instead of tasks × cells
-      .transform(Ann.clusterForWrite("cell"))
-      .write.partitionBy("cell").mode("overwrite").parquet(s"$path/base")
-    val members = spark.read.parquet(s"$path/base")
-      .groupBy("cell").agg(count(lit(1)).as("__m"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    require(members.nonEmpty,
-      s"no base row was SQ8-scoreable for $path -- empty or non-finite corpus?")
-    import spark.implicits._
-    // sq sidecar BEFORE the codebook (the index-complete marker lands
-    // last): a crash between the two leaves an index every entry point
-    // rejects loudly (readCodebookSidecar: no codebook dir)
-    (0 until d).map(i => (i, st.mins(i), st.maxs(i)))
-      .toDF("dim_idx", "mn", "mx")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/sq")
-    Ann.writeCodebookSidecar(spark, path, codebook, members, atomicSwap = false)
+    val (b, _, _, st) = encodedBase(base, baseId, baseVec)
+    val codec = ivfSq8Codec(
+      Ann.fitCodebook(b.select(col("b_id"), col("b_emb")), nlist, seed, maxFit), st)
+    val raw = base.select(baseId.as("b_id"), baseVec.as("b_emb"))
+    IndexLake.build(path, codec, raw, codec.encode(raw))
   }
+
+  /** The IVF-SQ8 codec: the [[encodedBase]] gates with the persisted
+    * stats' dimension, cell-assigned codes payload (b_id, codes, r_nrm;
+    * cell), the quantizer in `sq/` (one row per dimension: mn, mx).
+    */
+  private def ivfSq8Codec(centroids: Array[Array[Double]], st: Sq8Stats): IndexLake.Codec =
+    new IndexLake.Codec(IndexLake.IvfSq8, centroids) {
+      def encode(b: DataFrame): DataFrame =
+        sq8Encode(finiteScoreable(b).filter(size(col("b_emb")) === st.dim), st)
+          .withColumn("cell", Ann.cellExpr(col("b_emb"), coarse))
+          .filter(col("cell").isNotNull)
+          .select("b_id", "codes", "r_nrm", "cell")
+      def gates: String =
+        "null embedding, non-finite element (NaN/Inf/null), zero norm, " +
+          s"dimension != fitted dim ${st.dim}, or zero-norm reconstruction"
+      override def sidecars(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
+        import spark.implicits._
+        (0 until st.dim).map(i => (i, st.mins(i), st.maxs(i)))
+          .toDF("dim_idx", "mn", "mx")
+          .coalesce(1).write.mode("overwrite").parquet(s"$path/sq")
+      }
+    }
 
   /** The persisted quantizer of an IVF-SQ8 index — bounded collect of
     * D rows, validated dense (a gap would decode every code of that
@@ -314,12 +315,11 @@ object Sq {
     Sq8Stats(sorted.map(_.getDouble(1)), sorted.map(_.getDouble(2)))
   }
 
-  /** KNN against a persisted [[buildIvfSq8Index]] index: probe ranks
-    * from the codebook sidecar, a partition-pruned CODES scan of only
-    * the probed cells, ADC on the decoded reconstruction, exact rerank
-    * against `source` (the corpus table holding the original vectors —
-    * the `requireFullCoverage` drift guard of the PQ path applies).
-    * Same caller cache contract as [[Ann.queryIvfIndex]].
+  /** KNN against a persisted [[buildIvfSq8Index]] index: the shared
+    * probed-cell CODES scan ([[IndexLake.probe]]), ADC on the decoded
+    * reconstruction, exact rerank against `source` (the corpus table
+    * holding the original vectors — the drift guard of the PQ path
+    * applies). Same caller cache contract as [[Pq.queryIvfPqIndex]].
     */
   def queryIvfSq8Index(
       spark: org.apache.spark.sql.SparkSession, path: String,
@@ -327,101 +327,32 @@ object Sq {
       queries: DataFrame, qId: Column, qVec: Column,
       k: Int, nprobe: Int = 4, shortlist: Int = 0,
       eligible: Option[(DataFrame, Column)] = None): DataFrame = {
-    Ann.requireBaseServable(spark, path)
-    Ann.requireQuantizerMarker(spark, path, "sq",
-      "Ann.queryIvfIndex / Pq.queryIvfPqIndex")
     val sl = Pq.shortlistSize(shortlist, k)
+    val p = IndexLake.probe(spark, path, IndexLake.IvfSq8, queries, qId, qVec, nprobe, eligible)
     val st = loadSqStats(spark, path)
-    val (coarse, members) = Ann.readCodebookSidecar(spark, path)
-    val live = members.collect { case (c, m) if m > 0 => c }.toSeq
-    val centDf = Ann.centroidFrame(spark, coarse)
-      .filter(col("cell").isin(live.map(Int.box): _*))
-    val q = Ann.validQueries(queries, qId, qVec)
-    Ann.requireQueryDim(q, st.dim)
-    val (cells, probed) = Ann.probePruned(q, centDf, nprobe)
-    val pruned = spark.read.parquet(s"$path/base")
-      .filter(col("cell").isin(cells.map(Int.box): _*))
-    val filtered = eligible match {
-      case Some((el, elId)) =>
-        pruned.join(el.select(elId.as("b_id")), Seq("b_id"), "left_semi")
-      case None => pruned
-    }
-    val approx = filtered
-      .join(broadcast(probed), "cell")
+    val approx = p.scan
+      .join(broadcast(p.probed), "cell")
       .withColumn("recon", decodeExpr(col("codes"), st))
       .select(col("q_id"), col("b_id"),
         (Vectors.dot(col("recon"), col("q_emb")) / (col("r_nrm") * col("qp_nrm"))).as("sim"))
-    val short = Ann.topkPerQuery(approx, sl)
-    val src = source.select(srcId.as("b_id"), srcVec.as("b_emb"))
-      .withColumn("b_nrm", Vectors.norm2(col("b_emb")))
-      .filter(col("b_nrm") > 0)
-    Pq.rerankExact(short, src, q, k, requireFullCoverage = true)
+    Pq.rerankSource(Ann.topkPerQuery(approx, sl), source, srcId, srcVec, p.q, k)
   }
 
   /** Incrementally extend a persisted [[buildIvfSq8Index]] index: new
-    * rows are gated by the SAME scoreable filters, encoded with the
-    * PERSISTED stats and assigned with the PERSISTED coarse codebook
-    * (no re-fit — build+add equals build-all-with-the-same-model),
-    * appended to the cell partitions, occupancy refreshed from the
-    * files this add wrote ([[Ann.addToIvfIndex]]'s listing-diff
-    * discipline and not-transactional caveat).
+    * rows pass the SAME scoreable gates, encoded with the PERSISTED
+    * stats and assigned with the PERSISTED coarse codebook (no re-fit —
+    * build+add equals build-all-with-the-same-model). Lifecycle
+    * contract: [[IndexLake]].
     */
   def addToIvfSq8Index(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      rows: DataFrame, id: Column, vec: Column): Unit = {
-    Ann.requireQuantizerMarker(spark, path, "sq",
-      "Ann.addToIvfIndex / Pq.addToIvfPqIndex")
-    val st = loadSqStats(spark, path)
-    val (coarse, prevMembers) = Ann.readCodebookSidecar(spark, path)
-    val basePath = s"$path/base"
-    val fs = new org.apache.hadoop.fs.Path(basePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val before = Ann.listDataFiles(fs, basePath)
-    rows.select(id.as("b_id"), vec.as("b_emb"))
-      .filter(col("b_emb").isNotNull &&
-        forall(col("b_emb"), x =>
-          x.isNotNull && !isnan(x) && abs(x) < lit(Float.PositiveInfinity)))
-      .withColumn("b_nrm", Vectors.norm2(col("b_emb")))
-      .filter(col("b_nrm") > 0)
-      .filter(size(col("b_emb")) === st.dim)
-      .withColumn("codes", encodeExpr(col("b_emb"), st))
-      .filter(forall(col("codes"), c => c.isNotNull))
-      .withColumn("recon", decodeExpr(col("codes"), st))
-      .withColumn("r_nrm", Vectors.norm2(col("recon")))
-      .filter(col("r_nrm") > 0)
-      .withColumn("cell", Ann.cellExpr(col("b_emb"), coarse))
-      .filter(col("cell").isNotNull)
-      .select("b_id", "codes", "r_nrm", "cell")
-      .transform(Ann.clusterForWrite("cell")) // clustered append (see build)
-      .write.partitionBy("cell").mode("append").parquet(basePath)
-    val newFiles = (Ann.listDataFiles(fs, basePath) -- before).toSeq
-    val delta =
-      if (newFiles.isEmpty) Map.empty[Int, Long]
-      else spark.read.option("basePath", basePath).parquet(newFiles: _*)
-        .groupBy("cell").agg(count(lit(1)).as("__m"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    require(delta.nonEmpty || rows.isEmpty,
-      s"no increment row was SQ8-scoreable for $path -- every row was gated " +
-        "out by one of: null embedding, non-finite element (NaN/Inf/null " +
-        s"cell), zero norm, dimension != fitted dim ${st.dim}, or " +
-        "zero-norm reconstruction; inspect the increment against these " +
-        "gates (the empty append already ran and changed nothing)")
-    val merged = (prevMembers.keySet ++ delta.keySet).map(c =>
-      c -> (prevMembers.getOrElse(c, 0L) + delta.getOrElse(c, 0L))).toMap
-    Ann.writeCodebookSidecar(spark, path, coarse, merged, atomicSwap = true)
-  }
+      rows: DataFrame, id: Column, vec: Column): Unit =
+    IndexLake.add(spark, path, IndexLake.IvfSq8, rows.select(id.as("b_id"), vec.as("b_emb")))(
+      coarse => ivfSq8Codec(coarse, loadSqStats(spark, path)))
 
-  /** Retention-delete from a persisted IVF-SQ8 index — delegates to the
-    * family's shared removal core (materialized victims, cell-confined
-    * anti-join rewrite, row-count gate, park-and-swap, absolute
-    * occupancy): every persisted codes row is scoreable by
-    * construction, like the PQ twin.
-    */
+  /** Retention-delete from a persisted IVF-SQ8 index ([[IndexLake.remove]]). */
   def removeFromIvfSq8Index(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      victims: DataFrame, vicId: Column): Unit = {
-    Ann.requireQuantizerMarker(spark, path, "sq",
-      "Ann.removeFromIvfIndex / Pq.removeFromIvfPqIndex")
-    Ann.removeFromIndexBase(spark, path, victims, vicId, lit(true))
-  }
+      victims: DataFrame, vicId: Column): Unit =
+    IndexLake.remove(spark, path, IndexLake.IvfSq8, victims, vicId)
 }
